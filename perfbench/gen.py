@@ -4,14 +4,14 @@
 Writes parquet files only. The same seed and knobs give byte-identical
 files; a different seed gives different draws with the same shape.
 
-    python3 perfbench/gen.py --workload ingest_bulk --seed 7 --out DIR
+    python3 perfbench/gen.py --workload stream_identity --seed 7 --out DIR
 
 Tables written, by workload:
-  ingest_bulk, stream_identity  events.parquet, wire/ (8 parquet files), meta.json
-  insight_mix                   events.parquet plus the dimension and
-                                TPC-H tables copied from --dims
-  curation                      documents.parquet, embeddings.parquet,
-                                planted.parquet (the planted duplicates)
+  stream_identity  events.parquet, wire/ (8 parquet files), meta.json
+  insight_mix      events.parquet plus the dimension and TPC-H tables
+                   copied from --dims
+  curation         documents.parquet, embeddings.parquet, planted.parquet
+                   (the planted duplicates)
 
 `events` has the schema of the registry's `events` table. `wire` holds
 one PostHog request body per row: plain JSON items, batch envelopes,
@@ -20,7 +20,7 @@ share of malformed bodies that ingest must route to dead letters. The
 person-side content of each item follows the registry's wire pipeline
 (`StateQueries.wireBodies`), so `StateQueries.pipeWireSql` is the closed
 form of the person table; `view` items also carry `$groups` and
-`$group_set` for the group replay.
+`$group_set`, so the input holds group events too.
 """
 import argparse
 import base64
@@ -36,7 +36,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-WORKLOADS = ("ingest_bulk", "insight_mix", "stream_identity", "curation")
+WORKLOADS = ("insight_mix", "stream_identity", "curation")
 DIM_TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
 EVENT_TYPES = ("signup", "purchase", "view", "click", "error")
 VOCAB = ("spark window merge table column vector stream value data small "
@@ -46,6 +46,7 @@ T0 = int(np.datetime64("2024-01-01T00:00:00", "us").astype(np.int64))
 T1 = int(np.datetime64("2024-01-31T00:00:00", "us").astype(np.int64))
 DIM = 64
 WIRE_FILES = 8
+MAX_LAG = 2  # a late body arrives 1..MAX_LAG batches late
 
 
 def knobs_parser():
@@ -64,8 +65,7 @@ def knobs_parser():
     p.add_argument("--malformed-share", type=float, default=0.01,
                    help="malformed bodies per well-formed body")
     p.add_argument("--late-share", type=float, default=0.05,
-                   help="share of bodies that arrive 1..--max-lag batches late")
-    p.add_argument("--max-lag", type=int, default=2)
+                   help="share of bodies that arrive late")
     p.add_argument("--docs", type=int, default=5_000)
     p.add_argument("--near-dup-share", type=float, default=0.01,
                    help="share of documents that are planted near-duplicates")
@@ -208,7 +208,7 @@ def gen_wire(rng, a, ev, path):
         run = its[i:i + size]
         body, form = encode(kind, run)
         late = rng.random() < a.late_share
-        lag = int(rng.integers(1, a.max_lag + 1)) if late else 0
+        lag = int(rng.integers(1, MAX_LAG + 1)) if late else 0
         add(body, form, len(run), i, i + len(run) - 1, lag, False)
         i += len(run)
         if rng.random() < a.malformed_share:
@@ -229,7 +229,7 @@ def gen_wire(rng, a, ev, path):
     for i in range(WIRE_FILES):
         write(tbl.slice(i * step, step), f"{path}/part-{i:02d}.parquet")
     return {"bodies": len(rows["body"]), "events": n,
-            "malformed": int(sum(rows["malformed"])), "max_lag": a.max_lag}
+            "malformed": int(sum(rows["malformed"])), "max_lag": MAX_LAG}
 
 
 def gen_documents(rng, a, path):

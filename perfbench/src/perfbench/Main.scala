@@ -68,6 +68,9 @@ final class Window {
   val lags = mutable.ArrayBuffer.empty[Double]
   var items = 0L
   var wallS = 0.0
+  /** Open loop: time spent waiting for the next op to fall due. */
+  var idleS = 0.0
+  def busyS: Double = wallS - idleS
   def ops: Int = latencies.size
 }
 
@@ -95,13 +98,12 @@ final class Ctx(val args: Args, val spark: SparkSession, val work: File, val tr:
   }
 }
 
-/** One benchmark workload. The run calls [[setup]] several times (each in
-  * a fresh session), then [[prime]] once, then [[op]] in a loop for the
-  * measured window, then [[finish]] for the checks and counts that stay
-  * outside the timers.
+/** One benchmark workload. The run calls [[setup]] and [[prime]] once,
+  * then [[op]] in a loop for the measured window, then [[finish]] for the
+  * checks and counts that stay outside the timers.
   */
 trait Workload {
-  /** Input registration and a small warm-up, in a new session. */
+  /** Input registration and a small warm-up. */
   def setup(c: Ctx): Unit
   /** One untimed iteration before the window, so the window is warm. */
   def prime(c: Ctx): Unit
@@ -127,8 +129,6 @@ trait Workload {
 }
 
 object Main {
-  /** Set-ups per run; setup_s is their median. */
-  val Setups = 3
   def session(a: Args, work: File): SparkSession = {
     val local = new File(work, "spark-local"); local.mkdirs()
     SparkSession.builder()
@@ -155,33 +155,24 @@ object Main {
     val wl = Workloads(a.workload)
     val tr = new Tracer(enabled = false, runId = a.workload)
 
-    // set-up, several times: the first from JVM start, later ones from a
-    // stopped session; the metric is their median
+    // set-up: from JVM start through session build, input registration
+    // and the warm-up, up to the first timed op
     val jvmStartMs = ManagementFactory.getRuntimeMXBean.getStartTime
-    var spark: SparkSession = null
-    var ctx: Ctx = null
-    val setups = (0 until Setups).map { i =>
-      val t0 = System.nanoTime()
-      if (ctx != null) {
-        wl.teardown(ctx)
-        spark.stop()
-        SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      }
-      spark = session(a, work)
-      spark.sparkContext.setLogLevel("WARN")
-      tr.spark = spark
-      ctx = new Ctx(a, spark, work, tr, result)
-      wl.setup(ctx)
-      val s = (System.nanoTime() - t0) / 1e9
-      if (i == 0) (System.currentTimeMillis() - jvmStartMs) / 1e3 else s
-    }
-    System.err.println(f"[perfbench] setups ${setups.map(s => f"$s%.3f").mkString(" ")}")
-    val p0 = System.nanoTime()
+    val spark = session(a, work)
+    spark.sparkContext.setLogLevel("WARN")
+    tr.spark = spark
+    val ctx = new Ctx(a, spark, work, tr, result)
+    def sinceStart = (System.currentTimeMillis() - jvmStartMs) / 1e3
+    val sessionS = sinceStart
+    wl.setup(ctx)
+    val registeredS = sinceStart
     wl.prime(ctx)
-    System.err.println(f"[perfbench] prime ${(System.nanoTime() - p0) / 1e9}%.3f s")
+    val setupS = sinceStart
+    System.err.println(f"[perfbench] setup $setupS%.3f s: session at $sessionS%.3f s, " +
+      f"inputs registered at $registeredS%.3f s, then the warm-up")
 
     val w = window(wl, ctx, a.seconds, None)
-    result.e2e("setup_s") = Stats.median(setups)
+    result.e2e("setup_s") = setupS
     if (w.ops > 0) result.e2e ++= wl.endToEnd(ctx, w)
 
     if (!a.trace) wl.finish(ctx, w, None)
@@ -197,18 +188,25 @@ object Main {
       probes.stop()
       traced.release()
       // untraced again after it: the mean of the windows either side
-      // cancels the warm-up the process makes between them
+      // cancels the warm-up the process makes between them; open-loop
+      // waits are left out, as the schedule fixes them
       val after = window(wl, ctx, Double.PositiveInfinity, Some(w.ops))
-      result.layers("trace_overhead_ratio") = tw.wallS / ((w.wallS + after.wallS) / 2)
+      result.layers("trace_overhead_ratio") = tw.busyS / ((w.busyS + after.busyS) / 2)
+      // the share of the traced window's busy time that falls inside a
+      // layer span; "op" is the wrapper around each whole op, so its self
+      // time is the uncovered part
       val self = traced.selfSeconds
-      result.layers("trace.span_coverage") = self.values.sum / tw.wallS
-      Layers.spark(result, probes, tw.wallS, a.cpus, self)
+      val covered = (self - "op").values.sum / tw.busyS
+      result.layers("trace.span_coverage") = covered
+      result.layers("trace.uncovered_share") = 1.0 - covered
+      Layers.spark(result, probes, tw.busyS, a.cpus, self)
       wl.finish(tctx, tw, Some(probes))
       traced.write(new File(out, "spans.json"))
     }
     result.layers("failed_op_ratio") =
       if (result.attempted == 0) 0.0 else result.failed.toDouble / result.attempted
     result.write(new File(out, "result.json"))
+    System.err.println(f"[perfbench] window ${w.wallS}%.3f s, done at $sinceStart%.3f s")
     wl.teardown(ctx)
     spark.stop()
   }
@@ -221,7 +219,10 @@ object Main {
     var i = 0
     while (limit.forall(i < _) && (limit.isDefined || now < seconds || i % wl.cycleLen != 0)) {
       val due = wl.dueS(i)
-      due.foreach { d => val wait = d - now; if (wait > 0) Thread.sleep((wait * 1000).toLong) }
+      due.foreach { d =>
+        val wait = d - now
+        if (wait > 0) { Thread.sleep((wait * 1000).toLong); w.idleS += wait }
+      }
       val start = now
       c.result.attempted += 1
       try {
@@ -247,7 +248,7 @@ object Main {
 
 /** The `spark.*` per-layer metrics, common to every workload. */
 object Layers {
-  def spark(r: Result, p: Probes, wallS: Double, cpus: Int, self: Map[String, Double]): Unit = {
+  def spark(r: Result, p: Probes, busyS: Double, cpus: Int, self: Map[String, Double]): Unit = {
     val analysis = p.phaseSeconds("analysis")
     val optimization = p.phaseSeconds("optimization")
     val planning = p.phaseSeconds("planning")
@@ -263,7 +264,7 @@ object Layers {
       "spark.jobs" -> p.jobs.sum.toDouble,
       "spark.tasks" -> p.tasks.sum.toDouble,
       "spark.sched_s" -> math.max(0.0,
-        wallS - analysis - optimization - planning - codegen - taskRun / cpus - driverOnly),
+        busyS - analysis - optimization - planning - codegen - taskRun / cpus - driverOnly),
       "spark.task_run_s" -> taskRun,
       "spark.task_cpu_s" -> p.taskCpuNs.sum / 1e9,
       "spark.gc_s" -> p.gcMs.sum / 1e3,

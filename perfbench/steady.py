@@ -9,7 +9,7 @@ metric and set it reports the median, the quartiles and the spread, the
 distance between the quartiles (`statistics.quantiles(n=4)`) as a share of
 the median. It flags a metric
 
-  - whose spread in either set exceeds its bound (setup_s excepted), or
+  - whose spread in either set exceeds its bound, or
   - whose set-B median is worse than set A's by more than its bound,
 
 and marks a spread above a third of the bound as marginal. Exit code 1
@@ -48,7 +48,6 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--runs", type=int, default=10)
     ap.add_argument("--workloads", help="comma-separated; default: all of BENCHMARK.json")
-    ap.add_argument("--sets", default="A,B", help="which sets to run (A, B or both)")
     ap.add_argument("--out", help="write the report as JSON here too")
     args = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -58,7 +57,7 @@ def main():
     report, flagged = {"run_seconds": bench["run_seconds"], "workloads": {}}, []
     for w in names:
         sets = {}
-        for s in args.sets.split(","):
+        for s in seeds:
             runs = [run_once(w, seed, bench["run_seconds"]) for seed in seeds[s]]
             bad = [r for r in runs if not r["correct"]]
             if bad:
@@ -75,21 +74,20 @@ def main():
             for s, st in sets.items():
                 sp = st["metrics"][name]["spread"]
                 tag = "ok"
-                if name != "setup_s" and sp > bound:
+                if sp > bound:
                     tag = "FLAG"
                     flagged.append(f"{w} {name} set {s}: spread {sp:.3f} > bound {bound}")
-                elif name != "setup_s" and sp > bound / 3:
+                elif sp > bound / 3:
                     tag = "marginal"
                 print(f"{w:16s} {name:12s} set {s}: median {st['metrics'][name]['median']:.5g} "
                       f"q1 {st['metrics'][name]['q1']:.5g} q3 {st['metrics'][name]['q3']:.5g} "
                       f"spread {sp:.3f} (bound {bound}) {tag}")
-            if "A" in sets and "B" in sets:
-                a, b = sets["A"]["metrics"][name]["median"], sets["B"]["metrics"][name]["median"]
-                worse = (b - a) / a if m["better"] == "lower" else (a - b) / a
-                tag = "ok" if worse <= bound else "FLAG"
-                if tag == "FLAG":
-                    flagged.append(f"{w} {name}: set B median worse by {worse:.3f} > {bound}")
-                print(f"{w:16s} {name:12s} B vs A: {worse:+.3f} worse (bound {bound}) {tag}")
+            a, b = sets["A"]["metrics"][name]["median"], sets["B"]["metrics"][name]["median"]
+            worse = (b - a) / a if m["better"] == "lower" else (a - b) / a
+            tag = "ok" if worse <= bound else "FLAG"
+            if tag == "FLAG":
+                flagged.append(f"{w} {name}: set B median worse by {worse:.3f} > {bound}")
+            print(f"{w:16s} {name:12s} B vs A: {worse:+.3f} worse (bound {bound}) {tag}")
         for s, st in sets.items():
             print(f"{w:16s} run wall set {s}: median {st['wall_s']['median']:.1f}s")
     report["flagged"] = flagged
