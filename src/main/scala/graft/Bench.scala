@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import java.nio.file.{Files, Paths}
 
 /** Bench main: runs every registered query against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line.
@@ -68,49 +70,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.envCores
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // The 251-query registry plans ~3,300 wholestage-codegen units
-      // per pass (measured, SPARK_GRAFT_CODEGEN_TRACE r14). A cache
-      // smaller than the working set is WORSE than useless under the
-      // bench's cyclic access pattern: LRU over a 3,300-unit cycle with
-      // 2,000 entries evicts every entry before its reuse — measured
-      // 3,466/3,244/3,281 compiles across three passes, i.e. a ~0% hit
-      // rate and tens of seconds of Janino per pass that CPU contention
-      // amplifies (the r13 q_ingest_browser bimodality). 10k entries
-      // covers the registry with headroom; class memory is trivial next
-      // to the 128 GiB heap.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // Spark 4's codegen cache key is (context classloader weakref,
-      // source), and STREAMING queries execute under a per-query
-      // artifact-isolation classloader — so every MemoryStream drive
-      // recompiled its entire source set per pass (measured r15:
-      // 20-29 identical-source Janino compiles per stream query per
-      // pass, ~137/pass across the 7 drive-loop queries; CodegenDiff
-      // q_stream_anomaly build2: 20 -> 0 with isolation off). This
-      // session adds no per-session artifacts, so isolation buys
-      // nothing here; a multi-tenant deployment that calls addArtifact
-      // should leave the default and accept per-query recompiles.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // ObjectHashAggregate falls back to SORT-based aggregation once
-      // its hash map holds this many distinct keys (default 128 — sized
-      // for unbounded collect_list buffers). Every typed aggregator in
-      // this engine is k-BOUNDED (TopKAggregator/TopKDoubleAggregator:
-      // O(k) per group by construction), so the fallback only re-
-      // introduces the full-input sort the aggregate exists to avoid —
-      // at the sf10 probe, q_sim_project_search's 4 000 query groups
-      // tripped the 128-key default and the "bounded" shortlist
-      // degraded into an 800M-row sort (heap OOM). 64k keys × k-capped
-      // buffers is ~MBs per task. Production sizes this the same way
-      // (keys-per-task × bounded buffer, not the collect_list default).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .getOrCreate()
+    val spark = GraftSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     installWindowWarnCapture()
 
@@ -118,7 +80,7 @@ object Bench {
       df.write.format("noop").mode("overwrite").save()
 
     // JVM/codegen warmup on the smallest table
-    try run(SparkEntry.queries("q_scan_count")(spark, sfDir)) catch { case _: Throwable => }
+    run(SparkEntry.queries("q_scan_count")(spark, sfDir))
     // materialize synthesized wire-payload inputs outside the timers so
     // ingest timings measure decode+normalize, not the test-data
     // generator — a failure here MUST abort: swallowing it would let
@@ -162,7 +124,8 @@ object Bench {
     def loadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
       catch { case _: Throwable => "" }
-    val passLog = scala.collection.mutable.ArrayBuffer.empty[String]
+    val om = new ObjectMapper()
+    val passLog = om.createArrayNode()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // per-query micro-batch DATA seconds, one entry per pass (only for
     // queries whose harness meters a "data" phase — the q_stream_* /
@@ -225,7 +188,10 @@ object Bench {
       // contention forensics: a drifted total should be attributable to
       // the box at a glance (loadavg spans, wall timestamps per pass),
       // not inferred from per-query minima archaeology across rounds
-      passLog += s"""{"pass":$pass,"start_ms":$started,"end_ms":${System.currentTimeMillis()},"loadavg_start":"$la0","loadavg_end":"${loadavg()}","jvm_heap_peak_mb":${HeapWatermark.jvmHeapPeakBytes >> 20}}"""
+      passLog.addObject().put("pass", pass).put("start_ms", started)
+        .put("end_ms", System.currentTimeMillis())
+        .put("loadavg_start", la0).put("loadavg_end", loadavg())
+        .put("jvm_heap_peak_mb", HeapWatermark.jvmHeapPeakBytes >> 20)
       timed
     }
     def median(xs: Seq[Double]): Double = {
@@ -254,96 +220,96 @@ object Bench {
     // (the driver's tail parser captured bench_trend instead of the
     // per-query metric line). scripts/bench_trend.py is the detailed
     // ratio report.
-    val trendJson: Option[String] = try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val hist = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
+    val trend: Option[ObjectNode] = try {
+      val t = om.createObjectNode()
+      Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
         .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
         .sortBy(_.getName.stripPrefix("BENCH_r").stripSuffix(".json").toInt)
-        .flatMap { f =>
+        .foreach { f =>
           val n = om.readTree(f)
           val p = n.path("parsed")
-          if (p.isMissingNode || p.path("value").isMissingNode) None
-          else Some(s""""r${n.path("n").asText()}":{"sec":${p.path("value").asDouble()},"nq":${p.path("nq").asInt()}}""")
+          if (!p.path("value").isMissingNode)
+            t.putObject(s"r${n.path("n").asText()}")
+              .put("sec", p.path("value").asDouble()).put("nq", p.path("nq").asInt())
         }
-      if (hist.nonEmpty)
-        Some(s"""{${hist.mkString(",")},"this_run":{"sec":$total,"nq":${names.size}}}""")
-      else None
-    } catch { case _: Throwable => None }
+      if (t.isEmpty) None
+      else { t.putObject("this_run").put("sec", total).put("nq", names.size); Some(t) }
+    } catch { case e: Exception =>
+      System.err.println(s"[bench] trend skipped: $e")
+      None
+    }
 
     // full precision, all passes, for inspection
-    val fullJson = {
-      def m(kvs: Seq[(String, Double)]) =
-        kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val ps = byPass.zipWithIndex
-        .map { case (p, i) => "\"pass" + (i + 1) + "\":" + m(p) }.mkString(",")
-      // escape control chars too (a CRLF message keeps its \r after the
-      // takeWhile above; raw control bytes would make the artifact
-      // unparseable for make_budgets.py)
-      def jstr(v: String): String = v.flatMap {
-        case '\\' => "\\\\"
-        case '"' => "\\\""
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
-      val fs = failures
-        .map { case (k, v) => "\"" + k + "\":\"" + jstr(v) + "\"" }
-        .mkString("{", ",", "}")
-      val env = s""""env":{"cpus":"$cpus","available_processors":${Runtime.getRuntime.availableProcessors()},"passes":${passLog.mkString("[", ",", "]")}}"""
-      // stream decomposition (VERDICT r13 item 5): per metered query the
-      // raw per-pass micro-batch DATA seconds — wall − data = machinery
-      // floor (MemoryStream transport, checkpoint dirs, sink setup) that
-      // amortizes away on a real long-running stream
-      val sd = dataSecs
-        .map { case (k, vs) => "\"" + k + "\":" + vs.mkString("[", ",", "]") }
-        .mkString("{", ",", "}")
-      // measured driver-collect high-water per site (HeapWatermark):
-      // the bounded-driver contract as a number the sf1 probe asserts
-      val hw = HeapWatermark.snapshot.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      // streaming state-store size high-waters per metered query: the
-      // number that says whether watermark/TTL eviction bounds state
-      val ss = stateHi
-        .map { case (k, m2) => "\"" + k + "\":" + m2.toSeq.sorted
-          .map { case (mk, mv) => "\"" + mk + "\":" + mv }
-          .mkString("{", ",", "}") }
-        .mkString("{", ",", "}")
-      val tr = trendJson.map(t => s""""trend":$t,""").getOrElse("")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${m(best)},$ps,"stream_data":$sd,"stream_state":$ss,"heap_watermarks":$hw,$tr"failures":$fs,$env,"sf":"$sfDir"}"""
+    val full = om.createObjectNode()
+    def obj(kvs: Seq[(String, Double)]): ObjectNode = {
+      val o = om.createObjectNode()
+      kvs.foreach { case (k, v) => o.put(k, v) }
+      o
     }
+    full.put("metric", "total").put("value", total).put("unit", "sec")
+    full.set[ObjectNode]("queries", obj(best))
+    byPass.zipWithIndex.foreach { case (p, i) => full.set[ObjectNode](s"pass${i + 1}", obj(p)) }
+    // stream decomposition (VERDICT r13 item 5): per metered query the
+    // raw per-pass micro-batch DATA seconds — wall − data = machinery
+    // floor (MemoryStream transport, checkpoint dirs, sink setup) that
+    // amortizes away on a real long-running stream
+    val sd = full.putObject("stream_data")
+    dataSecs.foreach { case (k, vs) => val a = sd.putArray(k); vs.foreach(a.add(_)) }
+    // streaming state-store size high-waters per metered query: the
+    // number that says whether watermark/TTL eviction bounds state
+    val ss = full.putObject("stream_state")
+    stateHi.foreach { case (k, m2) =>
+      val o = ss.putObject(k)
+      m2.toSeq.sorted.foreach { case (mk, mv) => o.put(mk, mv) }
+    }
+    // measured driver-collect high-water per site (HeapWatermark):
+    // the bounded-driver contract as a number the sf1 probe asserts
+    val hw = full.putObject("heap_watermarks")
+    HeapWatermark.snapshot.toSeq.sortBy(_._1).foreach { case (k, v) => hw.put(k, v) }
+    trend.foreach(full.set[ObjectNode]("trend", _))
+    val fs = full.putObject("failures")
+    failures.foreach { case (k, v) => fs.put(k, v) }
+    val env = full.putObject("env")
+    env.put("cpus", cpus.toString)
+      .put("available_processors", Runtime.getRuntime.availableProcessors())
+      .set[ObjectNode]("passes", passLog)
+    full.put("sf", sfDir)
     // the committed baseline artifact records FULL runs only — a
     // SPARK_GRAFT_ONLY dev subset writes to bench_dev.json so it can
     // never silently replace the cross-round comparison point
     // a skip-demoted run is a subset too: it must never replace the
     // committed full baseline
     val outFile = if (only.isEmpty && skip.isEmpty) "bench_full.json" else "bench_dev.json"
-    try {
-      val w = new java.io.PrintWriter(outFile)
-      try w.println(fullJson) finally w.close()
-    } catch { case _: Throwable => }
+    Files.writeString(Paths.get(outFile), om.writeValueAsString(full) + "\n")
 
     // compact stdout line: slowest-first until the budget, rest summed
     def fmt(v: Double): String =
       if (v >= 10) f"$v%.1f" else if (v >= 1) f"$v%.2f" else f"$v%.3f"
+    // the metric line carries fmt's rounding as exact JSON decimals
+    def dec(v: Double) = new java.math.BigDecimal(fmt(v))
     val budget = 1600
     val bySlow = best.sortBy(-_._2)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
+    val qs = om.createObjectNode()
     var used = 120 // envelope + others/nq keys headroom
     var others = 0.0
     bySlow.foreach { case (k, v) =>
-      val e = "\"" + k + "\":" + fmt(v)
-      if (used + e.length + 1 <= budget) { entries += e; used += e.length + 1 }
+      val len = k.length + fmt(v).length + 4 // "k":v,
+      if (used + len <= budget) { qs.put(k, dec(v)); used += len }
       else others += v
     }
-    val qs = entries.mkString("{", ",", "}")
     // the ONE stdout JSON line the driver parses — printed LAST, after
     // every artifact write and every stderr diagnostic below (VERDICT
     // r17 item 1: the driver's tail parser takes the final JSON line of
     // the run log; printing this mid-stream let the bench_trend line —
     // and, on a gated run, the bench_guard lines — shadow it, leaving
     // PERF_r16/r17 with empty per_query blocks despite rc=0 runs)
-    val metricLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"others":${fmt(others)},"nq":${names.size},"sf":"$sfDir"}"""
+    val metricLine = {
+      val m = om.createObjectNode()
+      m.put("metric", "total").put("value", dec(total)).put("unit", "sec")
+      m.set[ObjectNode]("queries", qs)
+      m.put("others", dec(others)).put("nq", names.size).put("sf", sfDir)
+      om.writeValueAsString(m)
+    }
     spark.stop()
 
     // a throwing query is a hard failure on full runs: it was timed as
@@ -371,7 +337,7 @@ object Bench {
     val budgetFile = new java.io.File("bench_budgets.json")
     var gateFailed = false
     if (only.isEmpty && skip.isEmpty && passes >= 2 && budgetFile.exists()) {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(budgetFile)
+      val root = om.readTree(budgetFile)
       val sfMatch = root.path("source_sf").asText("") == sfDir
       if (sfMatch) {
         val budgets = root.path("budgets")

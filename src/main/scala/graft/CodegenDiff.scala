@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev diagnostic: why does a registered query recompile codegen on a
   * warm pass? Runs the same query twice in one session, captures every
   * source Janino ACTUALLY compiled (via the CodeGenerator debug log —
@@ -50,38 +48,33 @@ object CodegenDiff {
     require(args.nonEmpty, "usage: CodegenDiff <query> [sfDir]")
     val q = args(0)
     val d = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      // GRAFT_CGDIFF_NOAQE=1 isolates AQE as the recompile source:
-      // adaptive re-planning can pick different physical variants per
-      // run from runtime statistics, which is legitimate new codegen
-      .config("spark.sql.adaptive.enabled",
-        (!sys.env.contains("GRAFT_CGDIFF_NOAQE")).toString)
-      // big cache so EVICTION of identical sources (the default is 100
-      // entries — smaller than many single queries) can't masquerade as
-      // per-run source churn; with this set, build-2 compiles ≈ the
-      // genuinely fresh sources. Finding for the record
-      // (q_prod_funnel_incremental): ~38 fresh units per run under AQE
-      // — adaptive re-planning picks different physical variants from
-      // runtime stats of the persisted base; 0 fresh with AQE off.
-      // Legitimate adaptivity, not a cache bug — the bench's residual
-      // warm-pass compiles are this plus streaming watermark literals.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // UNTRUNCATED source logging: the default 1000-line cap makes two
-      // DIFFERENT large sources (streaming agg easily exceeds it) appear
-      // byte-identical to the capture, which would misattribute a
-      // legitimate literal-differing recompile as a cache bug
-      .config("spark.sql.codegen.logging.maxLines", "-1")
-      // r15 finding: Spark 4's codegen cache key is (context classloader
-      // weakref, source). Streaming queries run under a per-query
-      // artifact-isolation classloader, so EVERY new streaming query
-      // recompiles its whole source set against a fresh key — identical
-      // sources, zero "fresh" diffs. GRAFT_CGDIFF_ISOLATION=1 restores
-      // the default to reproduce that behavior.
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.contains("GRAFT_CGDIFF_ISOLATION").toString)
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCores)
+    // GRAFT_CGDIFF_NOAQE=1 isolates AQE as the recompile source:
+    // adaptive re-planning can pick different physical variants per
+    // run from runtime statistics, which is legitimate new codegen.
+    // Finding for the record (q_prod_funnel_incremental): ~38 fresh
+    // units per run under AQE — adaptive re-planning picks different
+    // physical variants from runtime stats of the persisted base; 0
+    // fresh with AQE off. Legitimate adaptivity, not a cache bug — the
+    // bench's residual warm-pass compiles are this plus streaming
+    // watermark literals. (The session's 10k-entry codegen cache keeps
+    // EVICTION of identical sources from masquerading as per-run
+    // source churn: build-2 compiles ≈ the genuinely fresh sources.)
+    spark.conf.set("spark.sql.adaptive.enabled",
+      (!sys.env.contains("GRAFT_CGDIFF_NOAQE")).toString)
+    // UNTRUNCATED source logging: the default 1000-line cap makes two
+    // DIFFERENT large sources (streaming agg easily exceeds it) appear
+    // byte-identical to the capture, which would misattribute a
+    // legitimate literal-differing recompile as a cache bug
+    spark.conf.set("spark.sql.codegen.logging.maxLines", "-1")
+    // r15 finding: Spark 4's codegen cache key is (context classloader
+    // weakref, source). Streaming queries run under a per-query
+    // artifact-isolation classloader, so EVERY new streaming query
+    // recompiles its whole source set against a fresh key — identical
+    // sources, zero "fresh" diffs. GRAFT_CGDIFF_ISOLATION=1 restores
+    // the default to reproduce that behavior.
+    spark.conf.set("spark.sql.artifact.isolation.enabled",
+      sys.env.contains("GRAFT_CGDIFF_ISOLATION").toString)
     spark.sparkContext.setLogLevel("WARN")
     installCapture()
     import org.apache.spark.metrics.source.CodegenMetrics

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan for the
   * named queries (or a default set of scale-critical ones). Used to
   * verify pushdown/pruning/broadcast decisions survive — the "is this
@@ -15,12 +13,7 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q_filt_events", "q_join_multi", "q_join_bcast", "q_sort_top100",
         "q_agg_q1", "q_dedup_minhash_pairs", "q_sim_topk")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCores)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Diagnostic probe (not part of the driver contract): decompose the
@@ -33,17 +32,7 @@ object StreamDecomp {
       else Seq("q_stream_anomaly", "q_stream_dedup", "q_stream_funnel",
         "q_stream_late", "q_stream_lsh_gate", "q_stream_paths",
         "q_stream_sample", "q_pipe_stream_merge")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
 
     // phase sums and per-operator state timings for the CURRENT query

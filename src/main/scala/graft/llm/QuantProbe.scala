@@ -32,8 +32,15 @@ import org.apache.spark.storage.StorageLevel
   */
 object QuantProbe {
 
+  /** The k initial centroids: the first k members of `e` by `vec_id`.
+    * On the full corpus that is `vec_id < k`; on the `vec_id % mod == 0`
+    * sample it is still k vectors, so both quantizers have k cells.
+    */
+  def seeds(e: DataFrame, k: Long): DataFrame =
+    e.orderBy(col("vec_id")).limit(k.toInt)
+
   private def trainCents(s: SparkSession, e: DataFrame, k: Long): DataFrame = {
-    var cents: DataFrame = e.filter(col("vec_id") < k)
+    var cents: DataFrame = seeds(e, k)
       .select(col("vec_id").as("centroid_id"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("c"))
     for (_ <- 1 to KMeans.Iters) {
@@ -50,13 +57,7 @@ object QuantProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val mod = if (args.length > 1) args(1).toLong else 10L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(graft.GraftSession.envCores)
     spark.sparkContext.setLogLevel("ERROR")
 
     def timed[T](f: => T): (T, Double) = {

@@ -72,7 +72,7 @@ object Lake {
     * columns, so every downstream probe is a `variant_get` against
     * pre-parsed bytes instead of a `get_json_object` re-parse.
     * Measured 1.2–1.8× on props-heavy scans, growing with data
-    * (`graft.VariantProbe`: 1.95 s → 1.09 s single-probe at 1M rows).
+    * (SURVEY §4: 1.95 s → 1.09 s single-probe at 1M rows).
     * `try_parse_json` keeps ingest total: a malformed payload lands as
     * a NULL variant (the row survives; the string layout would have
     * carried the broken text into every downstream parse instead).

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** AQE skew-join gate: the runtime re-plan that keeps shuffle joins
   * alive under key skew at 100 TB. A hot join key concentrates one
@@ -14,25 +12,24 @@ import org.scalatest.BeforeAndAfterAll
   * adaptive plan actually split — a config regression (someone turning
   * `skewJoin` off) fails here, not at 3am on a production shuffle.
   */
-class AqeSkewSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AqeSkewSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    // shrink thresholds so the synthetic hot key qualifies as skewed
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.2")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    .getOrCreate()
+  protected def cores = 4
 
-  override def afterAll(): Unit = spark.stop()
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    Seq(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      // shrink thresholds so the synthetic hot key qualifies as skewed
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false"
+    ).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 
   test("a hot join key is split by AQE skew handling (skew=true in the final plan)") {
     import spark.implicits._

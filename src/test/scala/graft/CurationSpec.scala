@@ -1,10 +1,8 @@
 package graft
 
 import graft.llm.{Corpus, Dedup, Select}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Behavior checks for the round-9 curation operators (temperature
   * mixture weights, the quality filter chain, cluster survivorship,
@@ -12,16 +10,9 @@ import org.scalatest.BeforeAndAfterAll
   * DuckDB; these assert the SEMANTIC properties each operator exists
   * for.
   */
-class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CurationSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 4
 
   private val sf = "/root/testdata/sf0.001"
 

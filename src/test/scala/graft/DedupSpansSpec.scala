@@ -1,24 +1,15 @@
 package graft
 
 import graft.llm.Dedup
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
 
 /** Exact-substring span dedup (q_dedup_spans): coverage math pinned on
   * a hand-built corpus where every duplicated span is known.
   */
-class DedupSpansSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DedupSpansSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 2
 
   test("duplicated-span detection and token coverage") {
     import spark.implicits._

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Partition-invariance gate: the float-discipline claim ("same bits on
   * 32 local threads or 1000 executors") made executable. Each query
@@ -13,16 +11,9 @@ import org.scalatest.BeforeAndAfterAll
   * regression to order-dependent double aggregation fails here
   * deterministically (different partition counts reorder reduction).
   */
-class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DeterminismSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 4
 
   private val sf = "/root/testdata/sf0.001"
 

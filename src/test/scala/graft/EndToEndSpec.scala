@@ -4,10 +4,8 @@ import graft.ingest.{Codecs, Normalizer}
 import graft.ingest.Normalizer.IngestContext
 import graft.sources.Lake
 import graft.state.{PersonOp, PersonOpExtract, Replay}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
 
 /** End-to-end replay (the analogue of the reference's
@@ -16,16 +14,9 @@ import java.nio.file.Files
   * decode → normalize → lake append → person/group replay → snapshot
   * assertions on the landed tables.
   */
-class EndToEndSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EndToEndSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 2
 
   test("q_agg_approx: in-row HLL accuracy gate true for every group") {
     // the rel-error gate now lives IN the query result (est_within_5pct)

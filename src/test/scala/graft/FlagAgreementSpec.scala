@@ -3,10 +3,8 @@ package graft
 import graft.flags._
 import graft.flags.FlagColumns.FlagFrame
 import graft.functions.GraftExtensions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Scalar (serving) ↔ vectorized (backfill) agreement: the SAME flag
   * configs evaluated per-row by [[FlagEval]] and as Column logic by
@@ -16,15 +14,9 @@ import org.scalatest.BeforeAndAfterAll
   * the guarantee that a bulk cohort backfill assigns exactly what the
   * serving path would.
   */
-class FlagAgreementSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FlagAgreementSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 2
 
   private def vectorized(flag: FeatureFlag, rows: Seq[(String, Map[String, String])])
     : Map[String, (Boolean, Option[String])] = {

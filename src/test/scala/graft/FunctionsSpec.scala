@@ -2,27 +2,17 @@ package graft
 
 import graft.flags.FlagEval
 import graft.functions.GraftExtensions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Native Catalyst expression: SQL registration, Column API, codegen
   * path, and agreement with the scalar serving function.
   */
-class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FunctionsSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.register(s)
-    s
-  }
+  protected def cores = 2
 
-  override def afterAll(): Unit = spark.stop()
+  override def beforeAll(): Unit = { super.beforeAll(); GraftExtensions.register(spark) }
 
   test("flag_bucket SQL function matches serving-path scalar + vectors") {
     val rows = spark.sql(

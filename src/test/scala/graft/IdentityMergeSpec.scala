@@ -2,12 +2,11 @@ package graft
 
 import graft.state.{PersonOp, PersonOpExtract, PersonRecord, Replay}
 import graft.streaming.{IdentityMerge, IdentityMergeState}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The streaming identity merge must equal batch [[Replay.persons]]
   * after every prefix of micro-batches — including the corner the
@@ -16,16 +15,9 @@ import org.scalatest.BeforeAndAfterAll
   * merges live records inside the DO at alias time,
   * `/root/reference/src/persons.rs:255-338`).
   */
-class IdentityMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IdentityMergeSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 2
 
   private def asComparable(ds: Seq[PersonRecord]): Set[(String, Long, Long, Seq[String],
       Map[String, String], Map[String, String], Long)] =

@@ -2,25 +2,16 @@ package graft
 
 import graft.ingest.{Codecs, EventSchema, Normalizer}
 import graft.ingest.Normalizer.IngestContext
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Unit vectors for the ingest chain, mirroring the reference's own
   * tests (FIXTURES.md §1; extractors.rs:764-1091, models.rs:178-274,
   * pipeline.rs:458-600, posthog_endpoints.rs).
   */
-class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IngestSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 2
 
   private def ingestOne(body: String, ctx: IngestContext = IngestContext()) = {
     import spark.implicits._

@@ -3,27 +3,20 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** [[graft.plans.JsonFusion]]: repeated `get_json_object` probes of one
   * column fuse into a single shared `from_json` — value-equivalent on
   * every JSON shape, and plan-verified so the fusion (and its
   * deliberate non-fusions) can't silently regress.
   */
-class JsonFusionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class JsonFusionSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftExtensions.register(s)
-    s
+  protected def cores = 2
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    graft.functions.GraftExtensions.register(spark)
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   private def optimized(df: DataFrame): String =
     df.queryExecution.optimizedPlan.toString

@@ -1,24 +1,15 @@
 package graft
 
 import graft.llm.{KMeans, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** k-means quantizer training: the oracle proves bit-equality with
   * DuckDB; these assert the CLUSTERING invariants.
   */
-class KMeansSpec extends AnyFunSuite with BeforeAndAfterAll {
+class KMeansSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 4
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -114,5 +105,17 @@ class KMeansSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the formula itself (what sf1/sf10 exercise with real data)
     def c(n: Long) = math.max(8L, math.ceil(n.toDouble / Portable.CellTarget).toLong)
     assert(c(2000) == 8L && c(20000) == 79L && c(200000) == 782L)
+  }
+
+  test("sampled quantizer seeds: exactly k distinct members of the sample") {
+    import graft.llm.{Portable, QuantProbe}
+    val k = Portable.nCells(spark, sf)
+    val mod = 10L
+    val sample = Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding")).filter(col("vec_id") % mod === 0)
+    val ids = QuantProbe.seeds(sample, k).select(col("vec_id").cast("long"))
+      .collect().map(_.getLong(0)).toSeq
+    assert(ids.size == k && ids.distinct.size == k, s"seeds $ids for k=$k")
+    assert(ids.forall(_ % mod == 0), s"seed outside the sample: $ids")
   }
 }

@@ -3,22 +3,13 @@ package graft
 import graft.ingest.Normalizer
 import graft.ingest.Normalizer.IngestContext
 import graft.sources.Lake
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
 
-class LakeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LakeSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 2
 
   private def canonical(bodies: String*) = {
     import spark.implicits._

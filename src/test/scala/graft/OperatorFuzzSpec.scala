@@ -2,9 +2,7 @@ package graft
 
 import graft.llm.Dedup
 import graft.queries.Product
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
 import java.sql.Timestamp
 
@@ -13,16 +11,9 @@ import java.sql.Timestamp
   * failure modes (window frames, tie-breaks, boundary gaps) that
   * hand-picked fixtures miss.
   */
-class OperatorFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
+class OperatorFuzzSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 2
 
   test("sessionization == brute-force gap splitter on random event times") {
     import spark.implicits._

@@ -1,12 +1,10 @@
 package graft
 
 import graft.llm.PQ
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** PQ training internals (r18): the subspace assignment moved from a
   * rank window over all N·M·Kc scored rows to the map-side argmin, and
@@ -16,16 +14,9 @@ import org.scalatest.BeforeAndAfterAll
   * these pin the two replacements against their window/buffer
   * predecessors directly and gate the plan shape.
   */
-class PQSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PQSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 4
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Physical-plan regression gates: the plan SHAPES that make these
   * operators hold at 100 TB, asserted so a refactor can't silently
@@ -12,17 +11,9 @@ import org.scalatest.BeforeAndAfterAll
   * where a top-k heap belongs. (The spot checks a human would do with
   * `.explain("formatted")` after each change, made permanent.)
   */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 2
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -4,23 +4,15 @@ import graft.flags._
 import graft.ingest.Normalizer
 import graft.ingest.Normalizer.IngestContext
 import graft.state.{PersonOp, Replay}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** F7 response shaping, S9 session intake, T9 debug snapshot —
   * mirroring `lib.rs:1053-1226` and `feature_flags.rs:170-204`.
   */
-class ResponseSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ResponseSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 2
 
   private val results = Seq(
     FlagResult("on", JBool(true), Some(JStr("pay")), active = true, "match", None),

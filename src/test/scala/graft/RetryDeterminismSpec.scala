@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Task-retry determinism (r15 judge item 4): at 100 TB task retries
   * are CERTAIN, and the engine's bit-exactness claims (dense
@@ -25,16 +24,12 @@ import org.scalatest.BeforeAndAfterAll
   * the person replay that is the zipWithIndex id-assignment stage
   * itself, whose per-partition offsets must not drift on re-execution).
   */
-class RetryDeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RetryDeterminismSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 4]") // maxFailures=4: injected first-attempt failures are retried
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  protected def cores = 4
 
-  override def afterAll(): Unit = spark.stop()
+  // maxFailures=4: injected first-attempt failures are retried
+  override lazy val spark: SparkSession = GraftSession(cores, maxFailures = 4)
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -2,10 +2,8 @@ package graft
 
 import graft.flags.FlagQueries
 import graft.llm.{Corpus, Select, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Behavior checks for the round-10 estimator/selection operators
   * (priority sampling, CUPED readout, TF-IDF keywords, cluster-balanced
@@ -13,16 +11,9 @@ import org.scalatest.BeforeAndAfterAll
   * these assert the SEMANTIC properties each operator exists for, plus
   * the plan shapes the 100 TB story depends on.
   */
-class SamplingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SamplingSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 4
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,25 +1,16 @@
 package graft
 
 import graft.llm.{Dedup, Select}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Behavior checks for the data-selection operators ([[graft.llm.Select]]):
   * the oracle harness proves bit-equality with DuckDB; these assert the
   * SEMANTIC properties each operator exists for.
   */
-class SelectSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SelectSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 4
 
   private val sf = "/root/testdata/sf0.001"
 

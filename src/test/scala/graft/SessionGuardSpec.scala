@@ -1,0 +1,30 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Every session comes from [[GraftSession]], so mains and specs run
+  * under one configuration. A second session builder in `src` would let
+  * a spec or a main drift from the shipped settings again.
+  */
+class SessionGuardSpec extends AnyFunSuite {
+
+  test("only GraftSession builds sessions, bar JsonFusionSpec's extension case") {
+    val needle = java.util.regex.Pattern.quote("SparkSession" + ".builder(").r
+    // JsonFusionSpec's withExtensions case exercises the builder
+    // injection path itself, so it cannot go through GraftSession
+    val allowed = Map("GraftSession.scala" -> 1, "JsonFusionSpec.scala" -> 1)
+    val roots = Seq("src/main", "src/test").map(Paths.get(_))
+    roots.foreach(r => assert(Files.isDirectory(r), s"$r not found from ${Paths.get("").toAbsolutePath}"))
+    val counts = roots.flatMap(r => Files.walk(r).iterator().asScala.toSeq)
+      .filter(p => p.toString.endsWith(".scala"))
+      .map((p: Path) => p -> needle.findAllMatchIn(Files.readString(p)).size)
+      .filter(_._2 > 0)
+    val unexpected = counts.filterNot { case (p, n) =>
+      allowed.get(p.getFileName.toString).contains(n)
+    }
+    assert(unexpected.isEmpty, s"session builders outside GraftSession: $unexpected")
+    assert(counts.map(_._1.getFileName.toString).toSet == allowed.keySet)
+  }
+}

@@ -1,22 +1,13 @@
 package graft
 
 import graft.sources.Snapshots
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
 
-class SnapshotsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SnapshotsSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 2
 
   private def range(a: Int, b: Int) = {
     import spark.implicits._
@@ -516,5 +507,87 @@ class SnapshotsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val del = cdc2.filter($"_change_type" === "delete")
       .select($"id").as[Long].collect().toSet
     assert(del == Set(2L), s"expected exactly the deleted row, got $del")
+  }
+
+  test("lake contract: append/read/time-travel/delete/merge/rollback") {
+    import spark.implicits._
+    val t = Files.createTempDirectory("snap").toString
+    def versions = Snapshots.snapshots(spark, t).map(_.version)
+    // append commits accumulate
+    Snapshots.commit(spark, t, range(0, 10))
+    Snapshots.commit(spark, t, range(10, 30))
+    assert(Snapshots.read(spark, t).count() == 30)
+    val versionsAfterAppends = versions
+    assert(versionsAfterAppends.size == 2)
+    assert(Snapshots.currentVersion(spark, t).contains(versionsAfterAppends.last))
+    // time travel to the first commit
+    assert(Snapshots.readAt(spark, t, versionsAfterAppends.head).count() == 10)
+    assert(Snapshots.readAsOf(spark, t, System.currentTimeMillis()).count() == 30)
+    // DELETE removes only pred IS TRUE
+    Snapshots.deleteWhere(spark, t, col("id") < 5)
+    assert(Snapshots.read(spark, t).count() == 25)
+    assert(Snapshots.read(spark, t).filter(col("id") < 5).count() == 0)
+    // MERGE: update one, insert one
+    Snapshots.mergeInto(spark, t, Seq((7L, "UP"), (100L, "NEW")).toDF("id", "s"), Seq("id"))
+    val after = Snapshots.read(spark, t)
+    assert(after.count() == 26)
+    assert(after.filter($"id" === 7L).select("s").as[String].head() == "UP")
+    // compaction changes no rows
+    Snapshots.compactSnapshot(spark, t, files = 1)
+    assert(Snapshots.read(spark, t).count() == 26)
+    // rollback to pre-delete: contents restored, history intact
+    Snapshots.rollback(spark, t, versionsAfterAppends.last)
+    assert(Snapshots.read(spark, t).count() == 30)
+    // replace overwrites everything
+    Snapshots.commit(spark, t, range(500, 503), operation = "replace", replace = true)
+    assert(Snapshots.read(spark, t).select(min($"id")).as[Long].head() == 500L)
+    // expire keeps the table readable
+    Snapshots.expire(spark, t, keepLast = 1)
+    assert(Snapshots.read(spark, t).count() == 3)
+  }
+
+  test("lake contract: incremental/CDC/WAP/epoch") {
+    import spark.implicits._
+    val t = Files.createTempDirectory("snap").toString
+    def versions = Snapshots.snapshots(spark, t).map(_.version)
+    // exactly-once epoch appends: a replayed epoch skips
+    Snapshots.commitEpoch(range(0, 10), t, 0L)
+    Snapshots.commitEpoch(range(10, 20), t, 1L)
+    Snapshots.commitEpoch(range(10, 20), t, 1L) // checkpoint replay
+    assert(Snapshots.read(spark, t).count() == 20)
+    val vs = versions
+    assert(vs.size == 2)
+    // incremental append scan covers exactly (v0, v1]
+    assert(Snapshots.readIncremental(spark, t, vs.head, vs.last).count() == 10)
+    assert(Snapshots.readIncremental(spark, t, vs.head, vs.last)
+      .select(min(col("id"))).as[Long].head() == 10L)
+    // row-level CDC across a COW delete: 5 deletes, 0 inserts
+    Snapshots.deleteWhere(spark, t, col("id") >= 15)
+    val chg = Snapshots.changesBetween(spark, t, vs.last, versions.last)
+    assert(chg.filter(col("_change_type") === "delete").count() == 5)
+    assert(chg.filter(col("_change_type") === "insert").count() == 0)
+    // WAP: staged rows invisible until published, then atomic
+    val sid = Snapshots.stageWrite(spark, t, range(100, 103))
+    assert(Snapshots.read(spark, t).count() == 15)
+    assert(Snapshots.readStaged(spark, t, sid).count() == 3)
+    Snapshots.publishStaged(spark, t, sid)
+    assert(Snapshots.read(spark, t).count() == 18)
+    // discarded stage never becomes visible
+    val sid2 = Snapshots.stageWrite(spark, t, range(200, 205))
+    Snapshots.discardStaged(spark, t, sid2)
+    assert(Snapshots.read(spark, t).count() == 18)
+    // exactly-once keyed epoch merge: upsert semantics + replay skip
+    val mt = Files.createTempDirectory("snap").toString
+    Snapshots.mergeEpoch(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), mt, Seq("id"), 0L)
+    Snapshots.mergeEpoch(Seq((2L, "B"), (3L, "c")).toDF("id", "s"), mt, Seq("id"), 1L)
+    // a replayed epoch with (hypothetically) different content must
+    // SKIP — the tag, not the rows, decides
+    Snapshots.mergeEpoch(Seq((2L, "Z"), (3L, "z")).toDF("id", "s"), mt, Seq("id"), 1L)
+    val m = Snapshots.read(spark, mt).as[(Long, String)].collect().toMap
+    assert(m == Map(1L -> "a", 2L -> "B", 3L -> "c"))
+    // the replay guard survives expiry (expiry-proof high-water)
+    Snapshots.expire(spark, mt, keepLast = 1)
+    Snapshots.mergeEpoch(Seq((9L, "X")).toDF("id", "s"), mt, Seq("id"), 0L)
+    assert(Snapshots.read(spark, mt).count() == 3) // epoch 0 replay skipped
   }
 }

@@ -1,25 +1,16 @@
 package graft
 
 import graft.state._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Person/group state machine vectors ported from the reference's unit
   * tests (`persons.rs:863-961`, `groups.rs`), plus identity-resolution
   * fixpoint cases.
   */
-class StateSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StateSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 2
 
   private def op(id: String, ord: Long,
       set: Map[String, String] = Map.empty,

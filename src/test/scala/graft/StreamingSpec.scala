@@ -2,12 +2,10 @@ package graft
 
 import graft.state.PersonOp
 import graft.streaming.Streaming
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import java.sql.Timestamp
 
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
@@ -16,16 +14,9 @@ case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, 
   * (micro-batched, watermarked, stateful) must equal their batch
   * execution on the union of all micro-batches.
   */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 2
 
   private def ts(min: Int): Timestamp = new Timestamp(1704067200000L + min * 60000L)
 

@@ -1,10 +1,8 @@
 package graft
 
 import graft.queries.Relational
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Theta-sketch cohort overlap ([[Relational.thetaOverlap]]): the
   * oracle hash-checks the exact twin columns; these assert the SKETCH
@@ -13,15 +11,9 @@ import org.scalatest.BeforeAndAfterAll
   * retained set is the k smallest hashes of the distinct key set, a
   * pure function of the set).
   */
-class ThetaSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ThetaSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  protected def cores = 4
 
   /** |A| = na keys [0, na), |B| = nb keys [na - overlap, na - overlap + nb). */
   private def keyed(na: Int, nb: Int, overlap: Int, parts: Int) = {
