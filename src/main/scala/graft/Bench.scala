@@ -127,32 +127,24 @@ object Bench {
     val om = new ObjectMapper()
     val passLog = om.createArrayNode()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // per-query micro-batch DATA seconds, one entry per pass (only for
-    // queries whose harness meters a "data" phase — the q_stream_* /
-    // pipe_stream_merge drive loops)
-    val dataSecs = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[Double]]
-    // per-query streaming STATE high-waters (VERDICT r14 #8): rows /
-    // bytes (+ RocksDB SST bytes when that provider runs) from
-    // StreamingQueryProgress.stateOperators, max-merged across passes
-    val stateHi = scala.collection.mutable.LinkedHashMap
-      .empty[String, Map[String, Long]]
+    // per metered query (the q_stream_* / pipe_stream_merge drive
+    // loops), its StreamMeter snapshot per pass
+    val meters = scala.collection.mutable.LinkedHashMap
+      .empty[String, scala.collection.mutable.ArrayBuffer[StreamMeter.Snapshot]]
+    // Janino compiles per query per pass (two CodegenMetrics reads): a
+    // nonzero count on a WARM pass means the codegen cache missed this
+    // query's classes (evicted, or re-keyed by a per-execution literal);
+    // graft.CodegenDiff attributes such recompiles
+    val codegenCompiles = om.createObjectNode()
     val byPass: Seq[Seq[(String, Double)]] = (1 to passes).map { pass =>
       val started = System.currentTimeMillis()
       val la0 = loadavg()
       HeapWatermark.resetJvmPeaks()
       val timed = names.filter(n => pass == passes || !onePass(n)).map { name =>
         currentQuery = name
-        PhaseMeter.reset()
-        StateMeter.reset()
-        // codegen forensics (dev, SPARK_GRAFT_CODEGEN_TRACE): Janino
-        // compile count/source bytes per query per pass — a nonzero
-        // count on a WARM pass means the 2000-entry codegen cache
-        // evicted this query's classes and it paid a recompile
-        val cgTrace = sys.env.contains("SPARK_GRAFT_CODEGEN_TRACE")
+        StreamMeter.reset()
         import org.apache.spark.metrics.source.CodegenMetrics
-        val cc0 = if (cgTrace) CodegenMetrics.METRIC_COMPILATION_TIME.getCount else 0L
-        val cs0 = if (cgTrace) CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount else 0L
+        val cc0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         try run(SparkEntry.queries(name)(spark, sfDir)) catch {
           case e: Throwable =>
@@ -161,24 +153,11 @@ object Bench {
                 Option(e.getMessage).getOrElse("").takeWhile(_ != '\n').take(200))
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        if (cgTrace) {
-          val cc = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cc0
-          val cs = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount - cs0
-          if (cc > 0 || dt > 2.0)
-            System.err.println(f"[cg-trace] pass$pass $name dt=$dt%.2fs compiles=$cc srcs=$cs")
-        }
-        // stream decomposition: harness drive loops metered their
-        // micro-batch execution as "data"; wall − data = machinery floor
-        PhaseMeter.snapshot.get("data").foreach { ds =>
-          dataSecs.getOrElseUpdate(name,
-            scala.collection.mutable.ArrayBuffer.empty[Double]) += ds
-        }
-        val st = StateMeter.snapshot
-        if (st.nonEmpty) {
-          val prev = stateHi.getOrElse(name, Map.empty)
-          stateHi(name) = (prev.keySet ++ st.keySet).map(k =>
-            k -> math.max(prev.getOrElse(k, 0L), st.getOrElse(k, 0L))).toMap
-        }
+        codegenCompiles.withArrayProperty(name)
+          .add(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cc0)
+        val m = StreamMeter.snapshot
+        if (m.seconds.nonEmpty || m.batches > 0)
+          meters.getOrElseUpdate(name, scala.collection.mutable.ArrayBuffer.empty) += m
         currentQuery = "between"
         // reclaim per-query persisted blocks: timings stay independent —
         // no eviction churn from blocks a finished query left behind
@@ -253,15 +232,34 @@ object Bench {
     // raw per-pass micro-batch DATA seconds — wall − data = machinery
     // floor (MemoryStream transport, checkpoint dirs, sink setup) that
     // amortizes away on a real long-running stream
+    val dataSecs = meters.map { case (k, ms) => k -> ms.flatMap(_.seconds.get("data")).toSeq }
+      .filter(_._2.nonEmpty)
     val sd = full.putObject("stream_data")
     dataSecs.foreach { case (k, vs) => val a = sd.putArray(k); vs.foreach(a.add(_)) }
-    // streaming state-store size high-waters per metered query: the
-    // number that says whether watermark/TTL eviction bounds state
-    val ss = full.putObject("stream_state")
-    stateHi.foreach { case (k, m2) =>
-      val o = ss.putObject(k)
-      m2.toSeq.sorted.foreach { case (mk, mv) => o.put(mk, mv) }
+    // one row per pass: n_batches, the phase seconds (data, and
+    // processBatch's resolve/components/plan/commit) and the progress
+    // durationMs / state-operator time sums in ms
+    val sp = full.putObject("stream_phases")
+    meters.foreach { case (k, ms) =>
+      val a = sp.putArray(k)
+      ms.foreach { m =>
+        val row = a.addObject().put("n_batches", m.batches)
+        m.seconds.toSeq.sorted.foreach { case (p, v) => row.put(s"${p}_s", v) }
+        m.ms.toSeq.sorted.foreach { case (p, v) => row.put(s"${p}_ms", v) }
+      }
     }
+    // streaming state-store size high-waters per metered query, maxed
+    // across passes: the number that says whether watermark/TTL
+    // eviction bounds state
+    val ss = full.putObject("stream_state")
+    meters.foreach { case (k, ms) =>
+      val hi = ms.flatMap(_.high).groupMapReduce(_._1)(_._2)(_ max _)
+      if (hi.nonEmpty) {
+        val o = ss.putObject(k)
+        hi.toSeq.sorted.foreach { case (mk, mv) => o.put(mk, mv) }
+      }
+    }
+    full.set[ObjectNode]("codegen_compiles", codegenCompiles)
     // measured driver-collect high-water per site (HeapWatermark):
     // the bounded-driver contract as a number the sf1 probe asserts
     val hw = full.putObject("heap_watermarks")

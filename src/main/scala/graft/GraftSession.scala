@@ -27,7 +27,8 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
       // The 251-query registry plans ~3,300 wholestage-codegen units
-      // per pass (measured, SPARK_GRAFT_CODEGEN_TRACE r14). A cache
+      // per pass (measured r14; per-query counts are `codegen_compiles`
+      // in the bench artifact). A cache
       // smaller than the working set is WORSE than useless under the
       // bench's cyclic access pattern: LRU over a 3,300-unit cycle with
       // 2,000 entries evicts every entry before its reuse — measured

@@ -39,7 +39,7 @@ object HeapWatermark {
   }
 
   /** Meter rows a site already collected under its own bound (point
-    * reads, require-gated harness collects, Iceberg metadata reads):
+    * reads, small fixed-size aggregates):
     * records the MEASURED retained bytes and returns the rows unchanged
     * — wrap-in-place, `recordRows(site, df.collect())`.
     */

@@ -193,13 +193,8 @@ final class IdentityMergeState(
     */
   def processBatch(ops: Dataset[PersonOp], batchId: Long): Unit = synchronized {
     if (batchId <= epoch) return
-    val trace = sys.env.contains("SPARK_GRAFT_TRACE")
-    var t0 = System.nanoTime()
-    def mark(what: String): Unit = if (trace) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[merge-trace] batch=$batchId $what ${(t1 - t0) / 1e9}%.3fs")
-      t0 = t1
-    }
+    // the epoch's merge split, booked per phase on the stream meter
+    val mark = graft.StreamMeter.laps()
     // the ONE Catalyst plan of the epoch: scan/filter/deserialize the
     // batch into JVM objects; everything after runs at the RDD layer
     // (class doc explains why). Persisted because two jobs read it:
@@ -276,7 +271,7 @@ final class IdentityMergeState(
       // persisted: read by the pair probe/collect, the edges, and the fold
       val resolvedP = resolved.persist(StorageLevel.MEMORY_AND_DISK)
       epochPersists += resolvedP
-      mark("resolve-built")
+      mark("resolve")
 
       // CONNECT: the batch's distinct resolved (raw, alias) pairs —
       // bounded by the batch's id dimension — give both the alias edges
@@ -369,7 +364,7 @@ final class IdentityMergeState(
         .map { case (_, (recs, opIt)) =>
           Replay.foldComponent(recs.iterator, opIt.iterator)
         }
-      mark("plan-built")
+      mark("plan")
 
       // COMMIT: re-root the state RDD (cuts lineage, explicit block
       // control). Coalesce first: the union's partition count is
@@ -402,7 +397,7 @@ final class IdentityMergeState(
       // fold, then the width relaxes back to what the state size needs.
       statePartsHint = math.max(statePartsHint,
         math.ceil(stateRows.toDouble / StateRowsPerPartition).toInt)
-      mark("commit-count")
+      mark("commit")
       // unpersist, not destroy: a lost `next` block recomputes through
       // this epoch's lineage, which still closes over the broadcasts
       broadcasts.foreach(_.unpersist(blocking = false))
@@ -625,24 +620,15 @@ object IdentityMerge {
     // a real cluster deployment checkpoints the op table reliably (lake
     // write) instead. The blocks are released below once the last batch
     // commits — localCheckpoint pins them for the app lifetime otherwise.
-    val trace = sys.env.contains("SPARK_GRAFT_TRACE")
-    var tr0 = System.nanoTime()
-    def mark(what: String): Unit = if (trace) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[merge-trace] replay $what ${(t1 - tr0) / 1e9}%.3fs")
-      tr0 = t1
-    }
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val opsDf = ops.localCheckpoint(true)
     val ckptRdds = spark.sparkContext.getPersistentRDDs
       .collect { case (id, rdd) if !persistedBefore.contains(id) => rdd }
-    mark("checkpoint")
     // arithmetic ord cuts from one cheap min/max agg (parity holds for
     // ANY ord-respecting split, so there is no reason to pay a
     // quantile pass for balanced batch sizes)
     val mm = graft.HeapWatermark.recordRows("identity_merge.ord_minmax",
       opsDf.agg(min(col("ord")), max(col("ord"))).collect()).head
-    mark("minmax")
     val cuts: Seq[(Double, Double)] =
       if (mm.isNullAt(0) || chunks <= 1) Seq((Double.NegativeInfinity, Double.PositiveInfinity))
       else {
@@ -652,9 +638,9 @@ object IdentityMerge {
           .distinct.sliding(2).map(p => (p.head, p.last)).toSeq
       }
     cuts.zipWithIndex.foreach { case ((lo, hi), i) =>
-      // metered as "data": the incremental fold itself, vs the harness
-      // checkpoint/minmax floor above (Bench stream decomposition)
-      graft.PhaseMeter.time("data")(
+      // metered as one "data" batch: the incremental fold itself, vs the
+      // harness checkpoint/minmax floor above
+      graft.StreamMeter.trigger(
         st.processBatch(opsDf.filter(col("ord") > lo && col("ord") <= hi), i.toLong))
     }
     ckptRdds.foreach(_.unpersist(blocking = false))

@@ -4,6 +4,7 @@ import graft.Tables
 import graft.queries.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Oracle-checked batch-equivalents of the streaming transforms: the
   * exact same `Streaming.*` builders run over the batch events table
@@ -19,11 +20,11 @@ object StreamQueries {
     */
   private val Chunks = 3
 
-  /** The one chunk-split formula the oracles mirror: `Chunks`
-    * event-time-ordered slices of `ceil`-ish size n/Chunks + 1.
+  /** The one chunk-split formula the oracles mirror: `n` (default
+    * `Chunks`) ordered slices of `ceil`-ish size rows/n + 1.
     */
-  private def chunk3[A](rows: Seq[A]): Seq[Seq[A]] =
-    rows.grouped(math.max(1, rows.length / Chunks + 1)).toSeq
+  private def chunk[A](rows: Seq[A], n: Int = Chunks): Seq[Seq[A]] =
+    rows.grouped(math.max(1, rows.length / n + 1)).toSeq
 
   /** The one straggler-injection policy the late/funnel/paths oracles
     * mirror closed-form: every `eid % 13 == 0` row is withheld from its
@@ -32,7 +33,7 @@ object StreamQueries {
     */
   private def stragglerBatches[A](rows: Seq[A], eid: A => Long,
       sentinel: A): Seq[Seq[A]] = {
-    val chunked = chunk3(rows)
+    val chunked = chunk(rows)
     (0 to chunked.length).map { i =>
       val onTime = if (i < chunked.length) chunked(i).filter(e => eid(e) % 13 != 0)
         else Seq(sentinel)
@@ -42,14 +43,7 @@ object StreamQueries {
     }
   }
 
-  /** Shared MemoryStream harness loop: feed `batches` through `build`'s
-    * streaming query one micro-batch at a time (processing all
-    * available between), return the Append-mode sink contents
-    * (localCheckpointed so the memory table can be dropped). The
-    * callers own chunking/straggler/sentinel policy — this owns the
-    * delicate sink/loop/cleanup plumbing.
-    */
-  /** Shuffle/state partition count for the MemoryStream drive loops.
+  /** Shuffle/state partition count for the MemoryStream drive loop.
     * Every stateful operator materializes one state-store instance PER
     * shuffle partition PER micro-batch — at the harness's ~100k-row
     * micro-batches, 32 partitions means the floor is state-store
@@ -58,15 +52,24 @@ object StreamQueries {
     * fraction of the per-batch overhead. A production deployment sizes
     * this to the cluster (state scales out with partitions); this
     * constant is harness-scale tuning, not a semantics knob — the
-    * oracle gates prove results are partition-count-invariant.
+    * oracle gates prove results are partition-count-invariant. A session
+    * narrower than 8 keeps its own width: the loop never widens it.
     */
   private val DrivePartitions = 8
 
-  private def driveBatches[A: org.apache.spark.sql.Encoder](
-      s: SparkSession, batches: Seq[Seq[A]], cols: Seq[String],
+  /** The MemoryStream harness loop: feed `batches` through `build`'s
+    * streaming query one micro-batch at a time (processing all
+    * available between) and return the sink contents in `mode`
+    * (localCheckpointed so the memory table can be dropped). The
+    * callers own chunking/straggler/sentinel policy — this owns the
+    * sink/loop/cleanup plumbing and the [[graft.StreamMeter]] calls:
+    * "data" times `processAllAvailable` alone, the progress fold runs
+    * outside it.
+    */
+  private[graft] def driveBatches[A: org.apache.spark.sql.Encoder](
+      s: SparkSession, batches: Seq[Seq[A]], cols: Seq[String], mode: OutputMode,
       build: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val mem = MemoryStream[A]
     val name = "sink_" + java.lang.Long.toHexString(System.nanoTime())
@@ -74,19 +77,18 @@ object StreamQueries {
     // restore the session conf right after so downstream batch rollups
     // keep the session's parallelism
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", DrivePartitions.toString)
+    s.conf.set("spark.sql.shuffle.partitions",
+      math.min(DrivePartitions, prevParts.toInt).toString)
     val q = try {
       build(mem.toDF().toDF(cols: _*))
         .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
+        .outputMode(mode).start()
     } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     val out = try {
       batches.foreach { b =>
         mem.addData(b: _*)
-        // metered as "data": the actual micro-batch execution — Bench
-        // separates this from the harness/transport floor (PhaseMeter)
-        graft.PhaseMeter.time("data")(q.processAllAvailable())
-        graft.StateMeter.record(q)
+        graft.StreamMeter.time("data")(q.processAllAvailable())
+        graft.StreamMeter.record(q)
       }
       s.table(name).localCheckpoint(true)
     } finally { q.stop() }
@@ -208,43 +210,20 @@ object StreamQueries {
     * lake/commit log with the gate unchanged.
     */
   def lshGate(s: SparkSession, d: String, chunks: Int = 3): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    // budget-gated harness collect (the collectBudgeted discipline): a
-    // count probe FIRST, collect only if the ~24 B/row band table fits
-    // the driver budget — a giant-sf Bench run fails loudly here rather
-    // than silently pressuring the driver
-    val bandsDf = graft.llm.Dedup.minhashBands(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nRows = bandsDf.count()
-    require(nRows * 24L <= graft.state.IdentityResolver.LocalHeapBudget,
-      s"streaming LSH gate harness: $nRows band rows exceed the MemoryStream driver " +
-        s"budget (${graft.state.IdentityResolver.LocalHeapBudget >> 20} MiB); at this scale " +
-        "feed the gate from readStream against the lake instead of the harness transport.")
-    val bandRows = graft.HeapWatermark.recordRows("stream_harness.lsh_bands",
-      bandsDf.collect()).map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    bandsDf.unpersist()
-    val mem = MemoryStream[(Long, Int, Long)]
-    val name = "lsh_gate_sink_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = Streaming.lshGateStream(mem.toDS()).toDF("doc_id", "band", "owner")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Update()).start()
-    val emissions = try {
-      val docs = bandRows.map(_._1).distinct.sorted
-      docs.grouped(math.max(1, docs.length / chunks + 1)).foreach { ch =>
-        val in = ch.toSet
-        mem.addData(bandRows.filter(t => in(t._1)).toSeq: _*)
-        graft.PhaseMeter.time("data")(q.processAllAvailable())
-        graft.StateMeter.record(q)
-      }
-      graft.HeapWatermark.recordRows("stream_harness.sink",
-        s.table(name).as[(Long, Int, Long)].collect())
-    } finally { q.stop(); s.sql(s"DROP TABLE IF EXISTS $name") }
+    // budgeted harness collect: ~24 B per (long, int, long) band row
+    val bandRows = graft.HeapWatermark.collectMetered("stream_harness.lsh_bands",
+      graft.llm.Dedup.minhashBands(s, d), 24L)
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    val docs = bandRows.map(_._1).distinct.sorted
+    val batches = chunk(docs.toSeq, chunks).map { ch =>
+      val in = ch.toSet
+      bandRows.filter(t => in(t._1)).toSeq
+    }
     // one shared verdict definition with the batch gate and its oracle
     graft.llm.Dedup.gateVerdicts(
-      s.createDataset(emissions.toSeq).toDF("doc_id", "band", "owner"))
+      driveBatches(s, batches, Seq("doc_id", "band", "band_hash"), OutputMode.Update(),
+        df => Streaming.lshGateStream(df.as[(Long, Int, Long)]).toDF("doc_id", "band", "owner")))
   }
 
   /** Q-STR-6 (streaming priority sample, driver-checked): the O(k)-state
@@ -256,35 +235,15 @@ object StreamQueries {
     * operator's rows verbatim, whatever the batch split.
     */
   def sample(s: SparkSession, d: String, chunks: Int = 3): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    // collectBudgeted discipline: 16 B/row (two longs), count probe first
-    val wDf = graft.llm.Corpus.sampleWeights(s, d)
-    val nRows = wDf.count()
-    require(nRows * 16L <= graft.state.IdentityResolver.LocalHeapBudget,
-      s"streaming sample harness: $nRows weight rows exceed the MemoryStream driver " +
-        s"budget (${graft.state.IdentityResolver.LocalHeapBudget >> 20} MiB); at this scale " +
-        "feed the sampler from readStream against the lake instead of the harness transport.")
-    val rows = graft.HeapWatermark.recordRows("stream_harness.sample_weights",
-      wDf.collect()).map(r => (r.getLong(0), r.getLong(1)))
-    val mem = MemoryStream[(Long, Long)]
-    val name = "sample_sink_" + java.lang.Long.toHexString(System.nanoTime())
-    val q = Streaming.prioritySampleStream(mem.toDS())
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Update()).start()
-    val picks = try {
-      rows.sortBy(_._1).grouped(math.max(1, rows.length / chunks + 1)).foreach { ch =>
-        mem.addData(ch.toSeq: _*)
-        graft.PhaseMeter.time("data")(q.processAllAvailable())
-        graft.StateMeter.record(q)
-      }
-      graft.HeapWatermark.recordRows("stream_harness.sink",
-        s.table(name).as[Streaming.SamplePick].collect())
-    } finally { q.stop(); s.sql(s"DROP TABLE IF EXISTS $name") }
-    val last = if (picks.isEmpty) 0L else picks.map(_.ver).max
-    s.createDataset(picks.filter(_.ver == last).toSeq)
+    // budgeted harness collect: 16 B per (long, long) weight row
+    val rows = graft.HeapWatermark.collectMetered("stream_harness.sample_weights",
+      graft.llm.Corpus.sampleWeights(s, d), 16L).map(r => (r.getLong(0), r.getLong(1)))
+    val batches = chunk(rows.sortBy(_._1).toSeq, chunks)
+    val picks = driveBatches(s, batches, Seq("doc_id", "w"), OutputMode.Update(),
+      df => Streaming.prioritySampleStream(df.as[(Long, Long)]).toDF())
+    // the latest emitted sample: the rows at the max state version
+    picks.join(picks.agg(max(col("ver")).as("ver")), "ver")
       .select(col("doc_id"), col("w"), col("priority"), col("tau"), col("est_w"))
   }
 
@@ -308,19 +267,13 @@ object StreamQueries {
     */
   def dedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // collectBudgeted discipline: ~64 B/row, count probe first
     val evDf = Tables.events(s, d)
       .select(col("ts"), col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val nRows = evDf.count()
-    require(nRows * 64L <= graft.state.IdentityResolver.LocalHeapBudget,
-      s"streaming dedup harness: $nRows event rows exceed the MemoryStream driver " +
-        s"budget (${graft.state.IdentityResolver.LocalHeapBudget >> 20} MiB); at this scale " +
-        "feed the dedup from readStream against the wire log instead of the harness transport.")
-    val rows = graft.HeapWatermark.recordRows("stream_harness.events",
-      evDf.collect()).map(r =>
+    // budgeted harness collect: ~64 B per event row
+    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf, 64L).map(r =>
       (r.getTimestamp(0), r.getLong(1), r.getLong(2), r.getString(3), r.getDouble(4)))
       .sortBy(_._2) // event ids are time-monotone: chunks arrive in event-time order
-    val chunked = chunk3(rows)
+    val chunked = chunk(rows)
     val batches = chunked.zipWithIndex.map { case (ch, i) =>
       val inBatchDups = ch.filter(_._2 % 11 == 0)
       val retries = if (i == 0) Seq.empty[(java.sql.Timestamp, Long, Long, String, Double)]
@@ -328,7 +281,7 @@ object StreamQueries {
       ch ++ inBatchDups ++ retries
     }
     driveBatches(s, batches, Seq("ts", "event_id", "user_id", "event_type", "value"),
-        Streaming.dedupStream(_, key = "event_id", horizon = "45 days"))
+        OutputMode.Append(), Streaming.dedupStream(_, key = "event_id", horizon = "45 days"))
       .groupBy(col("event_type"))
       .agg(
         count(lit(1)).as("n"),
@@ -359,19 +312,15 @@ object StreamQueries {
     val DayUs = 86400000000L
     val evDf = Tables.events(s, d)
       .select(col("ts"), col("event_id"), col("event_type"))
-    val nRows = evDf.count()
-    require(nRows * 48L <= graft.state.IdentityResolver.LocalHeapBudget,
-      s"late-audit harness: $nRows event rows exceed the MemoryStream driver budget; " +
-        "at this scale feed the audit from readStream against the wire log instead.")
-    val rows = graft.HeapWatermark.recordRows("stream_harness.events",
-      evDf.collect()).map(r =>
+    // budgeted harness collect: ~48 B per event row
+    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf, 48L).map(r =>
       (r.getTimestamp(0), r.getLong(1), r.getString(2)))
       .sortBy(_._2) // event ids are time-monotone: chunks arrive in event-time order
     val maxTs = rows.last._1
     val sentinel = (new java.sql.Timestamp(maxTs.getTime + 365L * 86400000L), -1L, "flush")
     val batches = stragglerBatches(rows.toSeq, (e: (java.sql.Timestamp, Long, String)) => e._2, sentinel)
     val kept = driveBatches(s, batches, Seq("ts", "event_id", "event_type"),
-        Streaming.watermarkedCounts(_, windowLen = "1 day", delay = "2 days"))
+        OutputMode.Append(), Streaming.watermarkedCounts(_, windowLen = "1 day", delay = "2 days"))
       .filter(col("event_type") =!= "flush")
     val fed = evDf
       .groupBy(
@@ -398,12 +347,8 @@ object StreamQueries {
     val evDf = Tables.events(s, d)
       .filter(col("event_type").isin("view", "click", "purchase"))
       .select(col("ts"), col("event_id"), col("user_id"), col("event_type"))
-    val nRows = evDf.count()
-    require(nRows * 56L <= graft.state.IdentityResolver.LocalHeapBudget,
-      s"streaming funnel harness: $nRows event rows exceed the MemoryStream driver " +
-        "budget; at this scale feed the funnel from readStream against the wire log.")
-    val rows = graft.HeapWatermark.recordRows("stream_harness.events",
-      evDf.collect()).map(r =>
+    // budgeted harness collect: ~56 B per event row
+    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf, 56L).map(r =>
       (r.getTimestamp(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .sortBy(_._2) // event ids are time-monotone: chunks arrive in event-time order
     val maxTs = rows.map(_._1.getTime).max
@@ -414,7 +359,7 @@ object StreamQueries {
     val batches = stragglerBatches(rows.toSeq,
       (e: (java.sql.Timestamp, Long, Long, String)) => e._2, sentinel)
     driveBatches(s, batches, Seq("ts", "event_id", "user_id", "event_type"),
-        Streaming.funnelStream(_).toDF())
+        OutputMode.Append(), Streaming.funnelStream(_).toDF())
       .filter(col("user_id") =!= -1L)
       .select(col("user_id"), col("view_eid"), col("click_eid"),
         col("purchase_eid"), col("steps_reached"))
@@ -433,12 +378,8 @@ object StreamQueries {
     import s.implicits._
     val evDf = Tables.events(s, d)
       .select(col("ts"), col("event_id"), col("user_id"), col("event_type"))
-    val nRows = evDf.count()
-    require(nRows * 56L <= graft.state.IdentityResolver.LocalHeapBudget,
-      s"streaming paths harness: $nRows event rows exceed the MemoryStream driver " +
-        "budget; at this scale feed the edges from readStream against the wire log.")
-    val rows = graft.HeapWatermark.recordRows("stream_harness.events",
-      evDf.collect()).map(r =>
+    // budgeted harness collect: ~56 B per event row
+    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf, 56L).map(r =>
       (r.getTimestamp(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .sortBy(_._2) // event ids are time-monotone: chunks arrive in event-time order
     val maxTs = rows.map(_._1.getTime).max
@@ -447,7 +388,7 @@ object StreamQueries {
     val batches = stragglerBatches(rows.toSeq,
       (e: (java.sql.Timestamp, Long, Long, String)) => e._2, sentinel)
     val edges = driveBatches(s, batches, Seq("ts", "event_id", "user_id", "event_type"),
-        Streaming.pathEdgesStream(_).toDF())
+        OutputMode.Append(), Streaming.pathEdgesStream(_).toDF())
       .filter(col("user_id") =!= -1L)
     graft.queries.Product.markovOver(
       edges.select(col("from_type"), col("to_type")))
@@ -469,12 +410,9 @@ object StreamQueries {
   def anomaly(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val evDf = Tables.events(s, d).select(col("ts"), col("event_id"))
-    val nRows = evDf.count()
-    require(nRows * 24L <= graft.state.IdentityResolver.LocalHeapBudget,
-      s"streaming anomaly harness: $nRows event rows exceed the MemoryStream driver " +
-        "budget; at this scale feed the rollup from readStream against the wire log.")
-    val rows = graft.HeapWatermark.recordRows("stream_harness.events",
-      evDf.collect()).map(r => (r.getTimestamp(0), r.getLong(1)))
+    // budgeted harness collect: ~24 B per event row
+    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf, 24L)
+      .map(r => (r.getTimestamp(0), r.getLong(1)))
       .sortBy(_._2) // event ids are time-monotone: chunks arrive in event-time order
     val maxTs = rows.map(_._1.getTime).max
     // The streaming == batch contract silently depends on the fixture
@@ -495,7 +433,7 @@ object StreamQueries {
       (e: (java.sql.Timestamp, Long)) => e._2, sentinel)
     graft.queries.Product.anomalyVerdict(
       driveBatches(s, batches, Seq("ts", "event_id"),
-        Streaming.dailyTotals(_, delay = "45 days")))
+        OutputMode.Append(), Streaming.dailyTotals(_, delay = "45 days")))
   }
 
   val lateSql: String =

@@ -556,31 +556,75 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   private val boundedWindowJustification: Map[String, String] =
     graft.plans.BoundedWindows.justification
 
+  /** Queries whose `collect_list`/`collect_set` buffers are bounded, each
+    * with its per-group bound. Everything else buffers a whole group on
+    * one executor — the unbounded state the session-wide 65,536-key
+    * ObjectHashAggregate fallback threshold would otherwise hide. The
+    * k-bounded typed aggregators (`TopKAggregator`, `TopKDoubleAggregator`)
+    * are not collects and need no entry.
+    */
+  private val boundedCollects: Map[String, String] = {
+    val buckets = s"BucketedOrder bucket table: <= ${graft.plans.BucketedOrder.DefaultBuckets} " +
+      "(bucket, count, sums) structs per partition key"
+    Seq("q_agg_skew_audit", "q_corpus_classifier_eval", "q_corpus_curriculum",
+      "q_corpus_selection_curve", "q_flag_qte", "q_flag_winsor", "q_sim_outliers",
+      "q_text_pack").map(_ -> buckets).toMap ++ Map(
+      "q_text_vocab" -> "encode: one document's (pos, id) tokens per group — document length, not corpus size",
+      "q_text_boilerplate" -> "one document's kept sentences per group — ceil(tokens / BoilerplateUnit)")
+  }
+
+  /** One pass over every registered query's optimized plan: its
+    * partition-less windows and its `collect_*` aggregate functions.
+    * Streaming twins are skipped: they execute micro-batches on build
+    * (seconds each, gated by their own StreamingSpec plan assertions),
+    * and their batch-side plans are covered by the batch query they twin.
+    */
+  private lazy val registryWalk: Seq[(String, Int, Seq[String])] = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, CollectSet}
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filterNot { case (name, _) =>
+        name.startsWith("q_stream_") || name == "q_pipe_stream_merge"
+      }
+      .map { case (name, fn) =>
+        val p = fn(spark, sf).queryExecution.optimizedPlan
+        val windows = p.collect { case w: LWindow if w.partitionSpec.isEmpty => w }.size
+        val collects = p.collectWithSubqueries { case n => n.expressions }.flatten
+          .flatMap(_.collect {
+            case _: CollectList => "collect_list"
+            case _: CollectSet => "collect_set"
+          })
+        (name, windows, collects)
+      }
+  }
+
   test("registry-wide: no partition-less window over unbounded input") {
     // `OVER (ORDER BY …)` with no PARTITION BY plans a single task
     // sorting the entire input — correct at test SF, the job at 100 TB.
     // The exact-order-stat family (pack, winsor, QTE, classifier AUC,
     // selection curve) decomposes via BucketedOrder instead; this gate
     // keeps the pattern from re-entering anywhere in the registry.
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) =>
-        // streaming twins execute micro-batches on build (seconds each,
-        // gated by their own StreamingSpec plan assertions) — and their
-        // batch-side plans are all covered by the batch query they twin
-        name.startsWith("q_stream_") || name == "q_pipe_stream_merge"
-      }
-      .flatMap { case (name, fn) =>
-        val windows = fn(spark, sf).queryExecution.optimizedPlan.collect {
-          case w: LWindow if w.partitionSpec.isEmpty => w
-        }
-        if (windows.nonEmpty && !boundedWindowJustification.contains(name))
-          Some(s"$name (${windows.size} partition-less window(s))")
-        else None
-      }
+    val offenders = registryWalk.collect {
+      case (name, windows, _) if windows > 0 && !boundedWindowJustification.contains(name) =>
+        s"$name ($windows partition-less window(s))"
+    }
     assert(offenders.isEmpty,
       "partition-less windows over potentially unbounded input — use " +
         "graft.plans.BucketedOrder or add a justified bound:\n  " +
         offenders.mkString("\n  "))
+  }
+
+  test("registry-wide: collect_* aggregates only where a per-group bound is listed") {
+    val offenders = registryWalk.collect {
+      case (name, _, collects) if collects.nonEmpty && !boundedCollects.contains(name) =>
+        s"$name (${collects.mkString(", ")})"
+    }
+    assert(offenders.isEmpty,
+      "collect_* buffers a whole group on one executor — use a bounded " +
+        "aggregator or list the query with its per-group bound:\n  " +
+        offenders.mkString("\n  "))
+    // a stale entry would let a new unbounded collect into that query unseen
+    val stale = boundedCollects.keySet -- registryWalk.collect { case (n, _, c) if c.nonEmpty => n }
+    assert(stale.isEmpty, s"bounded-collect entries with no collect_* left: $stale")
   }
 }

@@ -257,7 +257,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     * keyed dedup stream's watermark horizon (1 hour) must actually
     * EVICT old keys: feed 6 micro-batches of 50 unique keys each, one
     * simulated day apart, and the state-store row high-water (read via
-    * [[StateMeter]], the same collector that feeds the bench artifact's
+    * [[StreamMeter]], the same collector that feeds the bench artifact's
     * `stream_state` block) must stay near one batch's key count — NOT
     * accumulate toward the 300 keys fed. Runs under the default and
     * RocksDB providers (production runs RocksDB).
@@ -268,7 +268,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     provider.foreach(p =>
       spark.conf.set("spark.sql.streaming.stateStore.providerClass", p))
     try {
-      StateMeter.reset()
+      StreamMeter.reset()
       val mem = MemoryStream[Ev]
       val q = Streaming.dedupStream(mem.toDF(), key = "event_id")
         .writeStream.format("memory").queryName("ttl_out")
@@ -280,9 +280,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
             Ev(day * 1000L + k, new Timestamp(dayMs + k * 1000L), k.toLong,
               "view", 1.0)): _*)
           q.processAllAvailable()
-          StateMeter.record(q)
+          StreamMeter.record(q)
         }
-        StateMeter.snapshot
+        StreamMeter.snapshot.high
       } finally { q.stop(); spark.sql("DROP TABLE IF EXISTS ttl_out") }
     } finally provider.foreach(_ =>
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass"))
@@ -299,6 +299,67 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       assert(hw("rows") <= 120L, s"provider $p: state rows high-water ${hw("rows")}")
       assert(hw("bytes") > 0L)
     }
+  }
+
+  test("stream meter: the drive loop counts each trigger once and its trigger time fits in data") {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    // an independent count: the listener bus delivers every progress
+    // event once, then the run's termination event
+    val triggerMs = new java.util.concurrent.ConcurrentHashMap[Long, java.lang.Long]()
+    val run = new java.util.concurrent.atomic.AtomicReference[java.util.UUID]()
+    val ended = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name.startsWith("sink_") && e.progress.durationMs.containsKey("addBatch")) {
+          run.set(e.progress.runId)
+          triggerMs.put(e.progress.batchId, e.progress.durationMs.get("triggerExecution"))
+        }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.runId == run.get()) ended.set(true)
+    }
+    // three days of 20 keys: the 1-hour watermark adds a no-data
+    // eviction trigger after each data trigger
+    val batches = (0 until 3).map { day =>
+      (0 until 20).map(k => Ev(day * 100L + k,
+        new Timestamp(1704067200000L + day * 86400000L + k * 1000L), k.toLong, "view", 1.0))
+    }
+    spark.streams.addListener(listener)
+    try {
+      StreamMeter.reset()
+      val out = graft.streaming.StreamQueries.driveBatches(spark, batches,
+        Seq("event_id", "ts", "user_id", "event_type", "value"), OutputMode.Append(),
+        Streaming.dedupStream(_, key = "event_id"))
+      assert(out.count() == 60L)
+      val m = StreamMeter.snapshot
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!ended.get() && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(ended.get(), "query termination event never arrived")
+      assert(m.batches == triggerMs.size.toLong, s"meter ${m.batches} vs listener ${triggerMs.size}")
+      assert(m.batches > batches.size.toLong, s"no eviction triggers counted: ${m.batches}")
+      import scala.jdk.CollectionConverters._
+      val listenerSum = triggerMs.values.asScala.map(_.longValue).sum
+      assert(m.ms("triggerExecution") == listenerSum)
+      assert(m.ms("triggerExecution") / 1e3 <= m.seconds("data"),
+        s"triggers ${m.ms("triggerExecution")} ms outside data ${m.seconds("data")} s")
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("stream meter: replayChunked(…, 3) reports 3 batches and its merge split") {
+    import spark.implicits._
+    val ops = (1 to 30).map { ord =>
+      PersonOp(s"u${ord % 4}", ord.toLong, Map("k" -> ord.toString), Map.empty, Nil,
+        if (ord % 5 == 0) Some(s"anon-$ord") else None)
+    }
+    StreamMeter.reset()
+    graft.streaming.IdentityMerge.replayChunked(spark, ops.toDS(), 3).close()
+    val m = StreamMeter.snapshot
+    assert(m.batches == 3L)
+    val split = Seq("resolve", "components", "plan", "commit").map(p => p -> m.seconds.getOrElse(p, 0.0))
+    assert(split.forall(_._2 > 0.0), s"empty merge phase: $split")
+    assert(split.map(_._2).sum <= m.seconds("data"), s"$split vs data ${m.seconds("data")}")
   }
 
   test("streaming Misra-Gries heavy hitters: stream == model fold; coverage and error envelope hold") {
