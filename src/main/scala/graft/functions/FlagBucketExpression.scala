@@ -109,6 +109,7 @@ object GraftExtensions {
 
   private[functions] val descriptors =
     Seq(flagBucketDescriptor, VecDot.descriptor, VecDist2.descriptor, VecIDot.descriptor,
+      WordShingles3.descriptor, MinHashBands.descriptor,
       bloomAggDescriptor, bloomMightContainDescriptor)
 
   /** Install into an existing session: function registry + the

@@ -2,7 +2,7 @@ package graft.llm
 
 import graft.Tables
 import graft.queries.Q
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import Portable._
@@ -19,7 +19,12 @@ import Portable._
   *   - embedding-cosine near-dup.
   *
   * Scale design: signatures/fingerprints are computed in a map-only
-  * pass (pure codegen'd expressions, no UDF); the only shuffles are
+  * pass with no UDF. The MinHash path runs two native kernels inside
+  * whole-stage codegen: [[graft.functions.WordShingles3]] (text → distinct
+  * word 3-shingles) and [[graft.functions.MinHashBands]] (shingles → the
+  * 8 band hashes, from the constants below); the DuckDB renderings
+  * (`shingles3Sql`, `signatureSql`, `bandHashSql`) are the independent
+  * oracle for both. The only shuffles are
   * equi-joins on compact keys (band hash, chunk value, shingle hash).
   * Hot keys (a shingle shared by k docs → k² candidate pairs) are the
   * classic LSH skew; AQE skew-join handles moderate skew, and the
@@ -30,6 +35,7 @@ object Dedup {
   /** MinHash parameters: 32 permutations over a 31-bit hash space,
     * banded 8 × 4 for LSH. perm_i(x) = ((2i+1)·x + (12345+789i)) mod p.
     * Intermediates: (2·31+1)·(2^31) ≈ 2^37 — no overflow anywhere.
+    * [[graft.functions.MinHashBands]] and the oracle SQL both read these.
     */
   val P31 = 2147483647L // 2^31 - 1 (Mersenne prime)
   val NumPerms = 32
@@ -38,47 +44,17 @@ object Dedup {
   def permA(i: Int): Long = 2L * i + 1
   def permB(i: Int): Long = 12345L + 789L * i
 
-  /** Per-doc shingle-hash array (each shingle → h60 mod p), over a
-    * bound `toks` attribute — see [[shingleDocs]] for why the token
-    * array must be materialized first.
+  /** docs → (doc_id, sh): the distinct word 3-shingles of each text
+    * (the native [[graft.functions.WordShingles3]]).
     */
-  private def hashedShingles: Column =
-    transform(shingles3(col("toks")), s => h60(s) % P31)
+  private[graft] def shingles(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), wordShingles3(col("text")).as("sh"))
 
-  /** docs → (doc_id, sh): tokenize and shingle with the token array
-    * materialized in its OWN projection first. `shingles3` references
-    * its argument ~5× (twice in the size guard, 3× inside the
-    * transform lambda): inlined, that re-runs the regex `split` once
-    * per reference PER SHINGLE POSITION — ~18 s at sf0.1 vs ~3 s with
-    * the boundary (measured; codegen CSE cannot reach through
-    * higher-order-function lambdas, and CollapseProject keeps the
-    * boundary because `toks` is non-cheap and multiply-referenced).
-    */
   private[graft] def shingleDocs(s: SparkSession, d: String): DataFrame =
-    Tables.par(Tables.documents(s, d))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), shingles3(col("toks")).as("sh"))
+    shingles(Tables.par(Tables.documents(s, d)))
 
   private def hashedShinglesSql: String =
     s"list_transform(${shingles3Sql(tokensSql("text"))}, s -> ${h60Sql("s")} % ${P31})"
-
-  /** docs → (doc_id, hp): the hashed-shingle array **materialized in its
-    * own projection**. The 32 permutation folds below each reference
-    * `hp` as a plain attribute; without this boundary every fold would
-    * re-run tokenize→shingle→distinct→md5 (codegen subexpression
-    * elimination does not reach through higher-order-function lambdas,
-    * and CollapseProject keeps the boundary because the alias is
-    * non-cheap and multiply-referenced). 32× less per-doc work.
-    */
-  private def hashedShingleDocs(s: SparkSession, d: String): DataFrame =
-    Tables.par(Tables.documents(s, d))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), hashedShingles.as("hp"))
-
-  /** 32-element MinHash signature as one array column. */
-  private def signature(hs: Column): Column =
-    array((0 until NumPerms).map(i =>
-      array_min(transform(hs, x => (x * permA(i) + permB(i)) % P31))): _*)
 
   private def signatureSql(hs: String): String =
     "[" + (0 until NumPerms).map(i =>
@@ -86,12 +62,9 @@ object Dedup {
 
   /** Band hash: exact base-131 packing of the band's 4 sig values —
     * max ((2^31·131 + 2^31)·131 + 2^31)·131 + 2^31 < 2^53, no modulus
-    * needed, zero collision ambiguity across engines.
+    * needed, zero collision ambiguity across engines. The Spark side is
+    * the native [[graft.functions.MinHashBands]], which packs the same way.
     */
-  private def bandHash(sig: Column, b: Int): Column =
-    (0 until RowsPerBand).map(r => element_at(sig, b * RowsPerBand + r + 1))
-      .reduce((acc, v) => acc * 131L + v)
-
   private def bandHashSql(sig: String, b: Int): String =
     (0 until RowsPerBand).map(r => s"($sig)[${b * RowsPerBand + r + 1}]")
       .reduce((acc, v) => s"($acc * 131 + $v)")
@@ -216,31 +189,18 @@ object Dedup {
     * (doc, band). This is the shuffle-ready form: near-dup candidates
     * are exactly the groups sharing (band, band_hash).
     */
-  def minhashBands(s: SparkSession, d: String): DataFrame = {
-    val sig = hashedShingleDocs(s, d)
-      .select(col("doc_id"), signature(col("hp")).as("sig"))
-    sig.select(col("doc_id"),
-        posexplode(array((0 until Bands).map(b => bandHash(col("sig"), b)): _*)))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("band_hash"))
-  }
+  def minhashBands(s: SparkSession, d: String): DataFrame =
+    bandsFromShingles(shingleDocs(s, d))
 
-  /** [[minhashBands]] over an already-materialized (doc_id, sh) shingle
-    * table — `hp ≡ transform(sh, h60 % P31)` by construction (both are
-    * `shingles3(toks)` hashed elementwise), so a caller that needs the
-    * shingle table ANYWAY (pairs' exact-Jaccard verify, the audit's
+  /** (doc_id, sh) → (doc_id, band, band_hash) through the native
+    * [[graft.functions.MinHashBands]], so a caller that needs the
+    * shingle table anyway (pairs' exact-Jaccard verify, the audit's
     * inverted index) derives the bands from its persisted copy instead
-    * of paying the tokenize+shingle scan a second time. Same fencing
-    * discipline: `hp` materializes in its own projection so the 32
-    * permutation folds reference a plain attribute.
+    * of paying the shingle scan a second time.
     */
-  private[graft] def bandsFromShingles(shDocs: DataFrame): DataFrame = {
-    val sig = shDocs
-      .select(col("doc_id"), transform(col("sh"), sv => h60(sv) % P31).as("hp"))
-      .select(col("doc_id"), signature(col("hp")).as("sig"))
-    sig.select(col("doc_id"),
-        posexplode(array((0 until Bands).map(b => bandHash(col("sig"), b)): _*)))
+  private[graft] def bandsFromShingles(shDocs: DataFrame): DataFrame =
+    shDocs.select(col("doc_id"), posexplode(Portable.minhashBands(col("sh"))))
       .select(col("doc_id"), col("pos").as("band"), col("col").as("band_hash"))
-  }
 
   val minhashBandsSql: String = {
     val sig = signatureSql(hashedShinglesSql)
@@ -250,23 +210,6 @@ object Dedup {
        |SELECT doc_id, i - 1 AS band, bands[i] AS band_hash
        |FROM bh, unnest(generate_series(1, ${Bands})) AS g(i)""".stripMargin
   }
-
-  /** (doc_id, band, band_hash) over an arbitrary (doc_id, text) frame —
-    * [[minhashBands]] generalized to derived snapshots (the incremental
-    * query indexes the PREVIOUS snapshot, not the live table).
-    */
-  private def textBands(docs: DataFrame): DataFrame = {
-    val sig = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), hashedShingles.as("hp"))
-      .select(col("doc_id"), signature(col("hp")).as("sig"))
-    sig.select(col("doc_id"),
-        posexplode(array((0 until Bands).map(b => bandHash(col("sig"), b)): _*)))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("band_hash"))
-  }
-
-  private def textShingles(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), shingles3(col("toks")).as("sh"))
 
   /** Q-DEDUP-INCREMENTAL: dedup the NEW slice against the previous
     * snapshot's band index — the form a 100 TB re-crawl actually runs:
@@ -303,13 +246,13 @@ object Dedup {
     // path. Raw bands persist first (capBuckets reads its input twice);
     // the oracle applies the identical cap. Fixtures at sf ≤ 1 are
     // bit-unchanged (max bucket there is far below the cap).
-    val prevBands = capBuckets(textBands(prevDocs).persist(mem))
+    val prevBands = capBuckets(bandsFromShingles(shingles(prevDocs)).persist(mem))
     // the CAPPED new-slice bands are consumed three times (the prev
     // probe plus both sides of the new-slice self-join) — persist the
     // capped frame too (ADVICE r17), or the cap's bucket-count
     // aggregate and equi-join recompute per consumer; the raw persist
     // underneath stays because capBuckets reads its input twice
-    val newBands = capBuckets(textBands(newDocs).persist(mem)).persist(mem)
+    val newBands = capBuckets(bandsFromShingles(shingles(newDocs)).persist(mem)).persist(mem)
     val candPrev = newBands.as("a")
       .join(prevBands.as("p"),
         col("a.band") === col("p.band") && col("a.band_hash") === col("p.band_hash") &&
@@ -324,9 +267,9 @@ object Dedup {
       .groupBy(col("a.doc_id").as("new_id"), col("b.doc_id").as("matched_id"))
       .agg(count(lit(1)).as("n_bands"))
       .withColumn("vs_prev", lit(false))
-    val newSh = textShingles(newDocs).persist(mem)
+    val newSh = shingles(newDocs).persist(mem)
     val verifySh = newSh.withColumn("side", lit(false))
-      .unionByName(textShingles(prevDocs).withColumn("side", lit(true)))
+      .unionByName(shingles(prevDocs).withColumn("side", lit(true)))
     candPrev.unionByName(candNew)
       .join(newSh.as("na"), col("new_id") === col("na.doc_id"))
       .join(verifySh.as("m"),
@@ -437,17 +380,16 @@ object Dedup {
     * keeps the candidate count linear in the corpus.
     */
   def minhashPairs(s: SparkSession, d: String): DataFrame = {
-    // ONE tokenize+shingle pass: the persisted shingle table feeds both
-    // the exact-Jaccard verify AND the band derivation (hp ≡
-    // transform(sh, h60 % P31) by construction — see
-    // [[bandsFromShingles]]); bands cached too because both sides of
-    // the band self-join (and a possible broadcast build) read it
+    // ONE shingle pass: the persisted shingle table feeds both the
+    // exact-Jaccard verify AND the band derivation ([[bandsFromShingles]]);
+    // bands cached too because both sides of the band self-join (and a
+    // possible broadcast build) read it
     val docs = shingleDocs(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // persist the RAW bands, then cap: capBuckets reads its input twice
     // (bucket-size aggregate + the equi-join back), and the signature
-    // derivation (32 permutation folds over md5'd shingles) must not
-    // run once per side
+    // derivation (an md5 and 32 permutations per shingle) must not run
+    // once per side
     val bands0 = bandsFromShingles(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bands = capBuckets(bands0)
@@ -500,7 +442,7 @@ object Dedup {
     * everything; the plan is identical either way.
     */
   def lshAudit(s: SparkSession, d: String): DataFrame = {
-    // one tokenize+shingle pass shared by the candidate and truth sides
+    // one shingle pass shared by the candidate and truth sides
     // (see [[minhashPairs]]/[[bandsFromShingles]])
     val docs = shingleDocs(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -902,9 +844,11 @@ object Dedup {
     */
   val SpanW = 8
 
-  /** docs → (doc_id, n_tokens, spans[(pos, span_h)]); same projection
-    * -boundary discipline as [[shingleDocs]] (`toks` materialized
-    * once, referenced many times by the window transform).
+  /** docs → (doc_id, n_tokens, spans[(pos, span_h)]), with `toks`
+    * materialized in its own projection: the window transform references
+    * it many times, and codegen subexpression elimination cannot reach
+    * into a higher-order-function lambda, so inlined it would re-run the
+    * regex split per reference per span position.
     */
   private def spanDocs(s: SparkSession, d: String): DataFrame =
     Tables.par(Tables.documents(s, d))

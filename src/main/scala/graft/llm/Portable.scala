@@ -21,11 +21,13 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *     each use site), so wrap-around can never differ between engines.
   *
   * Scale note: everything here is a pure Catalyst expression tree
-  * (higher-order functions over arrays) — no UDFs, no serialization
-  * boundary, fully whole-stage-codegen'd, and embarrassingly parallel
-  * per row. At 100 TB the per-document work is O(tokens × constants)
-  * with zero shuffle; only the candidate-pair joins (LSH band join,
-  * shingle join) shuffle, and those shuffle compact keys, not documents.
+  * (built-ins, higher-order functions over arrays, and the native
+  * kernels in [[graft.functions]] for the hot loops the interpreted
+  * higher-order functions would box) — no UDFs, no serialization
+  * boundary, and embarrassingly parallel per row. At 100 TB the
+  * per-document work is O(tokens × constants) with zero shuffle; only
+  * the candidate-pair joins (LSH band join, shingle join) shuffle, and
+  * those shuffle compact keys, not documents.
   */
 object Portable {
 
@@ -44,14 +46,32 @@ object Portable {
   def tokensSql(x: String): String =
     s"list_filter(string_split_regex($x, '\\s+'), t -> len(t) > 0)"
 
-  /** Word 3-shingles (distinct), the unit for n-gram Jaccard / MinHash. */
-  def shingles3(toks: Column): Column =
-    when(size(toks) >= 3,
-      array_distinct(transform(sequence(lit(1), size(toks) - 2), i =>
-        concat_ws(" ", element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))))
-      .otherwise(array().cast("array<string>"))
+  /** A native expression from [[graft.functions.GraftExtensions]].
+    * Best-effort registration into the active session for ad-hoc/test
+    * columns; query paths are guaranteed registration via Tables.t with
+    * their own session.
+    */
+  private def native(name: String, args: Column*): Column = {
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .foreach(graft.functions.GraftExtensions.register)
+    call_function(name, args: _*)
+  }
 
-  /** DuckDB rendering of [[shingles3]] given a token-list expression. */
+  /** Distinct word 3-shingles of a text (first-occurrence order), the
+    * unit for n-gram Jaccard / MinHash: the native
+    * [[graft.functions.WordShingles3]] over [[tokens]]' whitespace
+    * split. Empty when the text has fewer than 3 tokens or is null.
+    */
+  def wordShingles3(text: Column): Column = native("word_shingles3", text)
+
+  /** The 8 MinHash LSH band hashes of a shingle array, as the native
+    * [[graft.functions.MinHashBands]] (constants in [[Dedup]]).
+    */
+  def minhashBands(sh: Column): Column = native("minhash_bands", sh)
+
+  /** DuckDB rendering of the word 3-shingles given a token-list
+    * expression: `wordShingles3(text)` ≡ `shingles3Sql(tokensSql(text))`.
+    */
   def shingles3Sql(toks: String): String =
     s"list_distinct(list_transform(generate_series(1, len($toks) - 2), i -> array_to_string(($toks)[i:i+2], ' ')))"
 
@@ -63,13 +83,7 @@ object Portable {
     * boxing per element; the native form is a primitive loop inside
     * whole-stage codegen). Registered lazily into the active session.
     */
-  def dot(a: Column, b: Column): Column = {
-    // Best-effort convenience for ad-hoc/test columns; query paths are
-    // guaranteed registration via Tables.t with their own session.
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftExtensions.register)
-    call_function("vec_dot", a, b)
-  }
+  def dot(a: Column, b: Column): Column = native("vec_dot", a, b)
 
   /** DuckDB rendering of [[dot]] (64-dim embeddings). */
   def dotSql(a: String, b: String): String =
@@ -78,22 +92,14 @@ object Portable {
   /** Squared euclidean distance — native twin of [[dot]] (same fold
     * contract, `(aᵢ−bᵢ)²` terms). The IVF/k-means assignment kernel.
     */
-  def dist2(a: Column, b: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftExtensions.register)
-    call_function("vec_dist2", a, b)
-  }
+  def dist2(a: Column, b: Column): Column = native("vec_dist2", a, b)
 
   /** Exact INTEGER dot product over `array<bigint>` — the int8-quant
     * scoring kernel, as the native [[graft.functions.VecIDot]]
     * expression (same codegen rationale as [[dot]]; int64 arithmetic
     * is exact, so this is identical to the HOF fold it replaces).
     */
-  def idot(a: Column, b: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.GraftExtensions.register)
-    call_function("vec_idot", a, b)
-  }
+  def idot(a: Column, b: Column): Column = native("vec_idot", a, b)
 
   /** DuckDB rendering of [[dist2]]. */
   def dist2Sql(a: String, b: String): String =

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.state.{GroupOp, GroupRecord, PersonOp, PersonRecord, Replay}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TimeMode, TimerValues, ValueState}
@@ -180,6 +180,18 @@ object Streaming {
     */
   case class FunnelBuffer(events: Seq[(Long, Int)], last_ts_us: Long)
 
+  /** Binary (Kryo) keyed-state encoder for the operators whose state
+    * holds a collection. Under the default product encoder such a state
+    * compiles new Janino classes on every run of its query: the state
+    * (de)serializer projections carry `MapObjects` lambda variables
+    * whose ids are globally unique per encoder build and per
+    * resolution, and the state store compiles those projections outside
+    * the optimizer, whose ReassignLambdaVariableID would normalize
+    * them. A binary encoder has no lambda variables, so its generated
+    * code is the same on every run and the codegen cache hits.
+    */
+  private def binaryState[S: scala.reflect.ClassTag]: Encoder[S] = Encoders.kryo[S]
+
   /** Per-user verdict — the exact row shape of the batch funnel. */
   case class FunnelVerdict(user_id: Long, view_eid: Long,
       click_eid: Option[Long], purchase_eid: Option[Long], steps_reached: Int)
@@ -231,6 +243,7 @@ object Streaming {
           .otherwise(2).as("step"),
         col("ts"))
       .as[FunnelEvent]
+    implicit val stateEnc: Encoder[FunnelBuffer] = binaryState
     typed.groupByKey(_.user_id)
       .flatMapGroupsWithState[FunnelBuffer, FunnelVerdict](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
@@ -293,6 +306,7 @@ object Streaming {
     def chain(uid: Long, evs: Seq[(Long, Long, String)]): Seq[PathEdge] =
       if (evs.size < 2) Seq.empty
       else evs.sliding(2).map(p => PathEdge(uid, p(0)._3, p(1)._3)).toSeq
+    implicit val stateEnc: Encoder[PathBuffer] = binaryState
     events.withWatermark("ts", horizon)
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
       .as[PathEvent]
@@ -570,7 +584,7 @@ object Streaming {
     import graft.llm.Portable._
     graft.functions.GraftExtensions.register(docs.sparkSession)
     docs
-      .withColumn("__sh", shingles3(tokens(col("text"))))
+      .withColumn("__sh", wordShingles3(col("text")))
       .withColumn("n_shingles", size(col("__sh")))
       .withColumn("n_bloom_hits", size(filter(col("__sh"), g =>
         call_function("might_contain", lit(bloom), xxhash64(h60(g))))))
@@ -662,6 +676,7 @@ object Streaming {
       }
       top(buf.toSeq).iterator
     }
+    implicit val stateEnc: Encoder[(Long, Seq[(Double, Long, Long)])] = binaryState
     partials.groupByKey(_ => true)
       .flatMapGroupsWithState[(Long, Seq[(Double, Long, Long)]), SamplePick](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {

@@ -2,6 +2,9 @@ package graft
 
 import graft.flags.FlagEval
 import graft.functions.GraftExtensions
+import graft.llm.Dedup.{Bands, NumPerms, P31, RowsPerBand, permA, permB}
+import graft.llm.Portable.{h60, minhashBands, wordShingles3}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -117,5 +120,88 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
       .select(call_function("vec_dot", col("a"), col("b")).as("d"))
       .queryExecution.executedPlan.toString
     assert(exec.contains("*(1) Project [vec_dot"), exec)
+  }
+
+  // The higher-order-function chain the native MinHash kernels replaced,
+  // kept here as their reference: tokenize → shingle → md5 → 32 folds.
+  private def hofTokens(text: Column): Column =
+    filter(split(text, "\\s+"), t => length(t) > 0)
+
+  private def hofShingles3(toks: Column): Column =
+    when(size(toks) >= 3,
+      array_distinct(transform(sequence(lit(1), size(toks) - 2), i =>
+        concat_ws(" ", element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))))
+      .otherwise(array().cast("array<string>"))
+
+  private def hofBands(sh: Column): Column = {
+    val hp = transform(sh, s => h60(s) % P31)
+    val sig = array((0 until NumPerms).map(i =>
+      array_min(transform(hp, x => (x * permA(i) + permB(i)) % P31))): _*)
+    array((0 until Bands).map(b =>
+      (0 until RowsPerBand).map(r => element_at(sig, b * RowsPerBand + r + 1))
+        .reduce((acc, v) => acc * 131L + v)): _*)
+  }
+
+  /** Randomized documents plus the tokenizer's edge cases. */
+  private def minhashDocs: Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(19)
+    val vocab = Array("a", "b", "c", "dup", "tok-1", "héllo", "naïve", "日本語", "x\u00A0y", "\uD83D\uDE00z")
+    val seps = Array(" ", "  ", "\t", "\n", "\r\n", " \t ", "\u000B", "\f")
+    def sep = seps(rnd.nextInt(seps.length))
+    val random = (1 to 300).map { i =>
+      val words = Seq.fill(rnd.nextInt(30))(vocab(rnd.nextInt(vocab.length)))
+      val body = words.map(_ + sep).mkString
+      (i.toLong, (if (rnd.nextBoolean()) sep else "") + body)
+    }
+    random ++ Seq(
+      1001L -> null, 1002L -> "", 1003L -> "one", 1004L -> "one two",
+      1005L -> " \t\n ", 1006L -> "  lead and trail  ", 1007L -> "\tmixed\nwhite \r\nspace\u000Bhere\f",
+      1008L -> "a b c a b c a b c", 1009L -> "x\u00A0y z w", 1010L -> "x\u00A0y z",
+      1011L -> "日本 語 テキスト 日本 語 テキスト", 1012L -> "one  two")
+  }
+
+  test("word_shingles3 / minhash_bands: bit-equal to the HOF formulation, codegen and interpreted") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("minhash-kernels").resolve("docs").toString
+    minhashDocs.toDF("doc_id", "text").write.parquet(dir)
+    def compare(how: String): Unit = {
+      val rows = spark.read.parquet(dir)
+        .select(col("doc_id"),
+          wordShingles3(col("text")).as("n_sh"), hofShingles3(hofTokens(col("text"))).as("h_sh"))
+        .select(col("doc_id"), col("n_sh"), col("h_sh"),
+          minhashBands(col("n_sh")).as("n_b"), hofBands(col("h_sh")).as("h_b"))
+        .collect()
+      assert(rows.length == minhashDocs.length)
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        assert(r.getSeq[String](1) == r.getSeq[String](2), s"$how shingles differ for doc $id")
+        val hof = r.getSeq[java.lang.Long](4)
+        assert(hof.length == Bands)
+        assert(r.getSeq[java.lang.Long](3) == hof, s"$how bands differ for doc $id")
+        // fewer than 3 tokens: no shingles, so 8 null bands
+        if (r.getSeq[String](2).isEmpty) assert(hof.forall(_ == null), s"doc $id")
+        else assert(hof.forall(_ != null), s"doc $id")
+      }
+      val short = rows.filter(_.getLong(0) > 1000).collect {
+        case r if r.getSeq[String](1).isEmpty => r.getLong(0)
+      }.toSet
+      assert(short == Set(1001L, 1002L, 1003L, 1004L, 1005L, 1010L, 1012L), s"$how: $short")
+      val repeated = rows.find(_.getLong(0) == 1008L).get.getSeq[String](1)
+      assert(repeated == Seq("a b c", "b c a", "c a b"), repeated)
+      assert(rows.find(_.getLong(0) == 1009L).get.getSeq[String](1) == Seq("x\u00A0y z w"))
+    }
+    try {
+      compare("codegen")
+      val exec = spark.read.parquet(dir)
+        .select(minhashBands(wordShingles3(col("text"))).as("b"))
+        .queryExecution.executedPlan.toString
+      assert("""\*\(\d+\) Project \[minhash_bands""".r.findFirstIn(exec).nonEmpty, exec)
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      compare("interpreted")
+    } finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
   }
 }

@@ -573,13 +573,52 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       "q_text_boilerplate" -> "one document's kept sentences per group — ceil(tokens / BoilerplateUnit)")
   }
 
-  /** One pass over every registered query's optimized plan: its
-    * partition-less windows and its `collect_*` aggregate functions.
-    * Streaming twins are skipped: they execute micro-batches on build
-    * (seconds each, gated by their own StreamingSpec plan assertions),
-    * and their batch-side plans are covered by the batch query they twin.
+  /** Queries with an `array_min` over an `array_transform`, each with
+    * why it is not the interpreted per-permutation MinHash fold that
+    * [[graft.functions.MinHashBands]] replaced.
     */
-  private lazy val registryWalk: Seq[(String, Int, Seq[String])] = {
+  private val minOverTransform: Map[String, String] = Map(
+    "q_text_fingerprint" -> "one char-8-gram minimum per document, not a per-permutation fold")
+
+  /** The registry queries whose plans band documents for LSH.
+    * `q_dedup_clusters`, `q_dedup_keep_best` and `q_corpus_funnel` band
+    * through `minhashPairs` too, but while their plan is built:
+    * `IdentityResolver.components` collects the pair edges into a local
+    * union-find, so their plans read a local relation and the
+    * `q_dedup_minhash_pairs` entry covers their banding.
+    */
+  private val bandingQueries: Set[String] = Set(
+    "q_dedup_minhash", "q_dedup_minhash_pairs", "q_dedup_incremental", "q_dedup_edit",
+    "q_dedup_lsh_audit", "q_dedup_lsh_gate")
+
+  /** A registered query's optimized plan, walked once: its
+    * partition-less windows, its `collect_*` aggregate functions, its
+    * `array_min(array_transform(…))` count and whether it runs
+    * `minhash_bands`. The last two also read the plans of the persisted
+    * frames it scans, where the MinHash bands are computed.
+    */
+  private case class Walk(name: String, windows: Int, collects: Seq[String],
+      minOverTransform: Int, bands: Boolean)
+
+  /** Every expression of a logical plan, its subqueries and the plans
+    * of the persisted frames it reads.
+    */
+  private def allExpressions(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  ): Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
+    p.collectWithSubqueries {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        allExpressions(r.cacheBuilder.logicalPlan)
+      case n => n.expressions
+    }.flatten
+
+  /** One pass over every registered query's optimized plan. Streaming
+    * twins are skipped: they execute micro-batches on build (seconds
+    * each, gated by their own StreamingSpec plan assertions), and their
+    * batch-side plans are covered by the batch query they twin.
+    */
+  private lazy val registryWalk: Seq[Walk] = {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayMin, ArrayTransform}
     import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, CollectSet}
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     SparkEntry.queries.toSeq.sortBy(_._1)
@@ -594,7 +633,10 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
             case _: CollectList => "collect_list"
             case _: CollectSet => "collect_set"
           })
-        (name, windows, collects)
+        val all = allExpressions(p)
+        val folds = all.map(_.collect { case ArrayMin(_: ArrayTransform) => 1 }.size).sum
+        val bands = all.exists(_.exists(_.isInstanceOf[graft.functions.MinHashBands]))
+        Walk(name, windows, collects, folds, bands)
       }
   }
 
@@ -605,8 +647,8 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // selection curve) decomposes via BucketedOrder instead; this gate
     // keeps the pattern from re-entering anywhere in the registry.
     val offenders = registryWalk.collect {
-      case (name, windows, _) if windows > 0 && !boundedWindowJustification.contains(name) =>
-        s"$name ($windows partition-less window(s))"
+      case w if w.windows > 0 && !boundedWindowJustification.contains(w.name) =>
+        s"${w.name} (${w.windows} partition-less window(s))"
     }
     assert(offenders.isEmpty,
       "partition-less windows over potentially unbounded input — use " +
@@ -616,15 +658,33 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
 
   test("registry-wide: collect_* aggregates only where a per-group bound is listed") {
     val offenders = registryWalk.collect {
-      case (name, _, collects) if collects.nonEmpty && !boundedCollects.contains(name) =>
-        s"$name (${collects.mkString(", ")})"
+      case w if w.collects.nonEmpty && !boundedCollects.contains(w.name) =>
+        s"${w.name} (${w.collects.mkString(", ")})"
     }
     assert(offenders.isEmpty,
       "collect_* buffers a whole group on one executor — use a bounded " +
         "aggregator or list the query with its per-group bound:\n  " +
         offenders.mkString("\n  "))
     // a stale entry would let a new unbounded collect into that query unseen
-    val stale = boundedCollects.keySet -- registryWalk.collect { case (n, _, c) if c.nonEmpty => n }
+    val stale = boundedCollects.keySet -- registryWalk.collect { case w if w.collects.nonEmpty => w.name }
     assert(stale.isEmpty, s"bounded-collect entries with no collect_* left: $stale")
+  }
+
+  test("registry-wide: MinHash banding runs the native kernel, never the interpreted fold") {
+    val folds = registryWalk.collect {
+      case w if w.minOverTransform > 0 && !minOverTransform.contains(w.name) =>
+        s"${w.name} (${w.minOverTransform} array_min over array_transform)"
+    }
+    assert(folds.isEmpty,
+      "an interpreted per-permutation fold is back — use minhash_bands, or list the " +
+        "query with why its minimum is not one:\n  " + folds.mkString("\n  "))
+    val staleFolds = minOverTransform.keySet -- registryWalk.collect {
+      case w if w.minOverTransform > 0 => w.name
+    }
+    assert(staleFolds.isEmpty, s"array_min entries with no array_min(array_transform) left: $staleFolds")
+    val banding = registryWalk.collect { case w if w.bands => w.name }.toSet
+    assert(banding == bandingQueries,
+      s"banding queries without minhash_bands: ${bandingQueries -- banding}; " +
+        s"unlisted queries with it: ${banding -- bandingQueries}")
   }
 }
