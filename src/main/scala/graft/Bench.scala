@@ -75,6 +75,17 @@ object Bench {
     val spark = GraftSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     installWindowWarnCapture()
+    // Spark jobs per query per pass: each timed run tags its jobs with
+    // "pass/query" as a local property (stream threads inherit it), and
+    // one listener counts jobs per tag. Listener events arrive on the
+    // bus thread, so the counts are read after spark.stop() drains it
+    val jobTag = "graft.bench.query"
+    val jobsByTag = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(jobTag)))
+          .foreach(jobsByTag.merge(_, 1L, (a, b) => a + b))
+    })
 
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -145,6 +156,7 @@ object Bench {
         StreamMeter.reset()
         import org.apache.spark.metrics.source.CodegenMetrics
         val cc0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        spark.sparkContext.setLocalProperty(jobTag, s"$pass/$name")
         val t0 = System.nanoTime()
         try run(SparkEntry.queries(name)(spark, sfDir)) catch {
           case e: Throwable =>
@@ -153,6 +165,7 @@ object Bench {
                 Option(e.getMessage).getOrElse("").takeWhile(_ != '\n').take(200))
         }
         val dt = (System.nanoTime() - t0) / 1e9
+        spark.sparkContext.setLocalProperty(jobTag, null)
         codegenCompiles.withArrayProperty(name)
           .add(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cc0)
         val m = StreamMeter.snapshot
@@ -173,6 +186,7 @@ object Bench {
         .put("jvm_heap_peak_mb", HeapWatermark.jvmHeapPeakBytes >> 20)
       timed
     }
+    spark.stop()
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -260,6 +274,14 @@ object Bench {
       }
     }
     full.set[ObjectNode]("codegen_compiles", codegenCompiles)
+    // same shape as codegen_compiles: one count per pass the query ran in
+    val sparkJobs = full.putObject("spark_jobs")
+    names.foreach { n =>
+      val a = sparkJobs.putArray(n)
+      byPass.zipWithIndex.collect { case (p, i) if p.exists(_._1 == n) =>
+        a.add(Option(jobsByTag.get(s"${i + 1}/$n")).fold(0L)(_.longValue))
+      }
+    }
     // measured driver-collect high-water per site (HeapWatermark):
     // the bounded-driver contract as a number the sf1 probe asserts
     val hw = full.putObject("heap_watermarks")
@@ -308,7 +330,6 @@ object Bench {
       m.put("others", dec(others)).put("nq", names.size).put("sf", sfDir)
       om.writeValueAsString(m)
     }
-    spark.stop()
 
     // a throwing query is a hard failure on full runs: it was timed as
     // a near-instant "success" pre-round-8 and could sail under every
