@@ -97,6 +97,14 @@ object CodegenDiff {
     val aSet = a.toSet
     val fresh = b.filterNot(aSet.contains)
     println(s"[cgdiff] build2 sources not seen in build1: ${fresh.size} / ${b.size}")
+    // every whole-stage source carries its codegen stage id (the class
+    // name and a `codegenStageId=` comment), and AQE numbers stages in
+    // the order it plans them, which can vary run to run: a fresh source
+    // that is a build-1 source under another id is a renumbered stage
+    def unnumbered(src: String) = src.replaceAll("(CodegenStage|codegenStageId=)\\d+", "$1")
+    val aUnnumbered = a.map(unnumbered).toSet
+    println(s"[cgdiff] of those, equal to a build1 source but for the codegen stage id: " +
+      s"${fresh.count(s => aUnnumbered.contains(unnumbered(s)))}")
     // IDENTICAL sources recompiled on build 2 = cache misses on an
     // unchanged key — name the generated classes so the cause can be
     // attributed (r15 finding: the streaming path's per-micro-batch

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -12,6 +12,15 @@ import org.apache.spark.sql.types.LongType
   * lake at full scale (the path just becomes a table/glob; Spark's
   * DataSourceV2 handles split planning, predicate pushdown and column
   * pruning identically).
+  *
+  * Every table and scratch load goes through [[parquet]], which infers
+  * each path's schema once per JVM and hands it to every later read: a
+  * bare `spark.read.parquet` runs a footer-reading Spark job on every
+  * load, a fixed cost each sub-second query would pay per table. The
+  * memo entry is stamped with (file, length, last-modified) of every
+  * file under the path plus the session's values of the parquet
+  * settings inference reads, so a rewritten table or a changed setting
+  * re-infers instead of serving a stale schema.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -39,13 +48,55 @@ object Tables {
     // stable schema regardless of the generator's writer settings.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
     else if (name == "events" &&
       df.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
       df.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
     else df
+  }
+
+  /** Load the parquet at `path` (a file, directory or glob) with its
+    * schema inferred once per stamp (see the object header). The memo
+    * holds the `StructType`, never the DataFrame: every call returns a
+    * fresh relation with its own attribute ids, so a query may load one
+    * table twice and join the two loads.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val stamp = schemaStamp(spark, path)
+    val schema = Option(schemas.get(path)).collect { case (`stamp`, s) => s }.getOrElse {
+      val s = spark.read.parquet(path).schema
+      schemas.put(path, stamp -> s)
+      s
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** path → (stamp, inferred schema); one entry per distinct path. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (SchemaStamp, StructType)]()
+
+  private final case class SchemaStamp(
+      files: Seq[(String, Long, Long)], settings: Seq[Option[String]])
+
+  /** The settings that change what parquet schema inference returns. */
+  private val inferenceSettings = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
+
+  private def schemaStamp(spark: SparkSession, path: String): SchemaStamp = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Option(fs.globStatus(p)).toSeq.flatten.flatMap { root =>
+      val it = fs.listFiles(root.getPath, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq
+    }
+    SchemaStamp(files.sorted, inferenceSettings.map(spark.conf.getOption))
   }
 
   /** Register every test table as a session temp view under its plain
@@ -85,7 +136,7 @@ object Tables {
       dir.getParentFile.mkdirs()
       df.write.mode("overwrite").parquet(dir.toString)
     }
-    s.read.parquet(dir.toString)
+    parquet(s, dir.toString)
   }
 
   /** Names seen at `scratch` call sites this session — the gate below

@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 /** Every session comes from [[GraftSession]], so mains and specs run
   * under one configuration. A second session builder in `src` would let
-  * a spec or a main drift from the shipped settings again.
+  * a spec or a main drift from the shipped settings again. Likewise
+  * every table load in `src/main` goes through [[Tables.parquet]].
   */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -26,5 +27,21 @@ class SessionGuardSpec extends AnyFunSuite {
     }
     assert(unexpected.isEmpty, s"session builders outside GraftSession: $unexpected")
     assert(counts.map(_._1.getFileName.toString).toSet == allowed.keySet)
+  }
+
+  test("registry code loads parquet through Tables.parquet's schema memo") {
+    // a bare read infers the schema with a Spark job on every load;
+    // Lake and Snapshots read file sets that change every commit, and
+    // IdentityMerge reads its own epoch deltas
+    val needle = """\.read\s*\.\s*(parquet|schema)\s*\(""".r
+    val allowed = Set("Tables.scala", "Lake.scala", "Snapshots.scala", "IdentityMerge.scala")
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
+    val readers = Files.walk(root).iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => needle.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.getFileName.toString).toSet
+    assert(readers.contains("Tables.scala"), s"the scanner found no reads: $readers")
+    assert((readers -- allowed).isEmpty, s"bare parquet reads outside Tables: ${readers -- allowed}")
   }
 }

@@ -1,0 +1,97 @@
+package graft
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
+import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.Files
+
+/** The schema memo behind [[Tables.parquet]]: a repeat load starts no
+  * Spark job, a rewritten table is re-inferred, the timestamp
+  * normalizations still apply, and every load is a fresh relation.
+  */
+class TablesSpec extends AnyFunSuite with SparkSuite {
+
+  protected def cores = 2
+
+  private val sf = "/root/testdata/sf0.001"
+
+  private def tmpDir(): String = Files.createTempDirectory("graft-tables").toString
+
+  /** Spark jobs started while `body` runs on this thread. Jobs carry a
+    * per-probe local property; a sentinel job started afterwards under
+    * another tag is awaited, and the bus delivers events in order, so
+    * every job of `body` has been counted by then.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val key = "graft.tablesspec.probe"
+    val probe = s"probe-${System.nanoTime()}"
+    val sentinel = s"sentinel-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(seen.merge(_, 1, (a, b) => a + b))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, probe)
+      try body finally sc.setLocalProperty(key, sentinel)
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.containsKey(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.containsKey(sentinel), "listener bus did not deliver the sentinel job")
+      Option(seen.get(probe)).fold(0)(_.intValue)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a repeat load of a table starts no Spark job") {
+    val dir = tmpDir()
+    spark.range(10).withColumn("v", col("id") * 2).write.parquet(s"$dir/orders.parquet")
+    assert(jobsDuring(Tables.orders(spark, dir).schema) >= 1, "cold load infers with a job")
+    assert(jobsDuring(Tables.orders(spark, dir).schema) == 0)
+    assert(Tables.orders(spark, dir).count() == 10)
+  }
+
+  test("a table rewritten in place with an added column reads the new schema") {
+    val dir = tmpDir()
+    val path = s"$dir/documents.parquet"
+    spark.range(5).toDF("doc_id").write.parquet(path)
+    assert(Tables.documents(spark, dir).columns.toSeq == Seq("doc_id"))
+    spark.range(5).toDF("doc_id").withColumn("text", lit("x"))
+      .write.mode("overwrite").parquet(path)
+    val df = Tables.documents(spark, dir)
+    assert(df.columns.toSeq == Seq("doc_id", "text"))
+    assert(df.filter(col("text") === "x").count() == 5)
+  }
+
+  test("events with a TIMESTAMP_NTZ or NANOS ts load as TimestampType on every load") {
+    val dir = tmpDir()
+    spark.sql("SELECT 1L AS event_id, TIMESTAMP_NTZ'2024-01-02 03:04:05' AS ts")
+      .write.parquet(s"$dir/events.parquet")
+    for (_ <- 1 to 2) {
+      val ev = Tables.events(spark, dir)
+      assert(ev.schema("ts").dataType == TimestampType)
+      assert(ev.select(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")).head().getString(0) ==
+        "2024-01-02 03:04:05")
+    }
+    // the fixture stores TIMESTAMP(NANOS)
+    for (_ <- 1 to 2)
+      assert(Tables.events(spark, sf).schema("ts").dataType == TimestampType)
+  }
+
+  test("two loads of one table are distinct relations and self-join") {
+    val a = Tables.events(spark, sf)
+    val b = Tables.events(spark, sf)
+    val ids = (d: org.apache.spark.sql.DataFrame) =>
+      d.queryExecution.analyzed.output.map(_.exprId).toSet
+    assert((ids(a) intersect ids(b)).isEmpty)
+    val joined = a.as("a").join(b.as("b"), col("a.event_id") === col("b.event_id"))
+      .select(col("a.event_id"), col("b.ts"))
+    assert(joined.count() == a.count())
+  }
+}
