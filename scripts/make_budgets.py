@@ -24,7 +24,9 @@ the new baseline no longer has, they are reported as dropped so a
 stale-baseline regeneration is loud instead of silent.
 
 Run this whenever the bench_full.json baseline is deliberately
-refreshed (from a WARM, full, multi-pass run); Bench (full multi-pass
+refreshed (from a WARM, full, multi-pass run) and folded by
+scripts/merge_baseline.py: an input without its `merged_from_runs` mark
+is refused; Bench (full multi-pass
 runs only) exits nonzero when a query or the total breaches, when a
 registered query has no budget entry, or when a query throws.
 
@@ -39,6 +41,15 @@ dst = sys.argv[2] if len(sys.argv) > 2 else "bench_budgets.json"
 
 with open(src) as f:
     full = json.load(f)
+
+# Budgets are sized against a per-query MINIMA fold. A single run (the
+# bench rewrites bench_full.json with one median run) would loosen every
+# budget without a word, so only a fold carrying merge_baseline.py's
+# mark is accepted.
+if "merged_from_runs" not in full:
+    sys.exit(f"refusing to budget {src}: it has no merged_from_runs mark, so it is "
+             "one bench run, not a per-query minima fold. Fold the round's runs "
+             "with scripts/merge_baseline.py first and budget its output.")
 
 if full.get("failures"):
     sys.exit(f"refusing to budget a baseline with failed queries: {sorted(full['failures'])}")

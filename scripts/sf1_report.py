@@ -93,7 +93,7 @@ FINDINGS = {
 # Driver-heap contract (VERDICT r13 item 7): the budgeted-collect sites
 # record the bytes they ACTUALLY retained (graft.HeapWatermark, emitted
 # by Bench as heap_watermarks). Assert each site under the documented
-# 512 MiB LocalHeapBudget at 10x data — measured, not estimated.
+# 512 MiB HeapWatermark.Budget at 10x data — measured, not estimated.
 HEAP_BUDGET = 512 * 1024 * 1024
 watermarks = dev.get("heap_watermarks", {})
 heap_breaches = sorted(

@@ -52,8 +52,8 @@ object GraftSession {
       // ObjectHashAggregate falls back to SORT-based aggregation once
       // its hash map holds this many distinct keys (default 128 — sized
       // for unbounded collect_list buffers). Every typed aggregator in
-      // this engine is k-BOUNDED (TopKAggregator/TopKDoubleAggregator:
-      // O(k) per group by construction), so the fallback only re-
+      // this engine is k-BOUNDED (TopKAggregator: O(k) per group by
+      // construction), so the fallback only re-
       // introduces the full-input sort the aggregate exists to avoid —
       // at the sf10 probe, q_sim_project_search's 4 000 query groups
       // tripped the 128-key default and the "bounded" shortlist

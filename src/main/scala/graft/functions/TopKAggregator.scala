@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import scala.reflect.runtime.universe.TypeTag
 
 /** Exact bounded per-group top-k as a typed [[Aggregator]] — the scale
   * path for "keep the first k of each key" (per-domain caps, per-query
@@ -18,21 +20,27 @@ import org.apache.spark.sql.Encoder
   * total order), so partial buffers lose only rows that can never be
   * in the global answer.
   *
+  * The sort key's order is passed in: `Ordering.Long` for integer keys,
+  * `Ordering.Double.TotalOrdering` for scores — the SAME total order
+  * Spark's `ORDER BY key ASC` uses (−0.0 < 0.0, NaN greatest), so a
+  * caller that negates a score (`key = −score`, NaN mapped to −∞ by the
+  * caller) reproduces `ORDER BY score DESC, id ASC` bit-exactly.
+  *
   * The buffer is a sorted Seq capped at k (k is small by contract —
   * caps/shortlists, not percentiles); insertion keeps it sorted so
   * merge is a linear merge. Registered through `functions.udaf`, it
   * runs as ObjectHashAggregate with partial aggregation — shuffle
   * volume is k rows per (partition, group), never the raw rows.
   */
-final class TopKAggregator(k: Int)
-    extends Aggregator[(Long, Long), Seq[(Long, Long)], Seq[(Long, Long)]] {
+final class TopKAggregator[K: TypeTag](k: Int, keyOrd: Ordering[K])
+    extends Aggregator[(K, Long), Seq[(K, Long)], Seq[(K, Long)]] {
   require(k > 0, s"top-k needs k > 0, got $k")
 
-  override def zero: Seq[(Long, Long)] = Vector.empty
+  override def zero: Seq[(K, Long)] = Vector.empty
 
-  private val ord = implicitly[Ordering[(Long, Long)]]
+  private val ord: Ordering[(K, Long)] = Ordering.Tuple2(keyOrd, Ordering.Long)
 
-  override def reduce(buf: Seq[(Long, Long)], row: (Long, Long)): Seq[(Long, Long)] = {
+  override def reduce(buf: Seq[(K, Long)], row: (K, Long)): Seq[(K, Long)] = {
     // skip rows that can't enter a full buffer (the hot path at scale)
     if (buf.length == k && ord.lteq(buf.last, row)) buf
     else {
@@ -46,9 +54,9 @@ final class TopKAggregator(k: Int)
     }
   }
 
-  override def merge(a: Seq[(Long, Long)], b: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+  override def merge(a: Seq[(K, Long)], b: Seq[(K, Long)]): Seq[(K, Long)] = {
     // linear two-pointer merge of two sorted buffers, capped at k
-    val out = Vector.newBuilder[(Long, Long)]
+    val out = Vector.newBuilder[(K, Long)]
     var i = 0
     var j = 0
     var n = 0
@@ -61,11 +69,9 @@ final class TopKAggregator(k: Int)
     out.result()
   }
 
-  override def finish(buf: Seq[(Long, Long)]): Seq[(Long, Long)] = buf
+  override def finish(buf: Seq[(K, Long)]): Seq[(K, Long)] = buf
 
-  override def bufferEncoder: Encoder[Seq[(Long, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Long)]]()
+  override def bufferEncoder: Encoder[Seq[(K, Long)]] = ExpressionEncoder[Seq[(K, Long)]]()
 
-  override def outputEncoder: Encoder[Seq[(Long, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Long)]]()
+  override def outputEncoder: Encoder[Seq[(K, Long)]] = ExpressionEncoder[Seq[(K, Long)]]()
 }

@@ -187,7 +187,7 @@ object PQ {
 
   /** ADC top-[[TopK]] per query over `scored` = (q_id, vec_id, adc):
     * a bounded per-query top-k aggregate
-    * ([[graft.functions.TopKDoubleAggregator]], min-k by
+    * ([[graft.functions.TopKAggregator]], min-k by
     * (adc, vec_id) under TotalOrdering — adc is finite by construction:
     * sums of squared finite-float distances) instead of the previous
     * rank window, which shuffled and sorted every scored row of every
@@ -199,7 +199,7 @@ object PQ {
     * exactly the window's `row_number` over (adc ASC, vec_id ASC).
     */
   private def adcTopK(scored: DataFrame): DataFrame = {
-    val topk = udaf(new graft.functions.TopKDoubleAggregator(TopK))
+    val topk = udaf(new graft.functions.TopKAggregator(TopK, Ordering.Double.TotalOrdering))
     scored
       .groupBy(col("q_id"))
       .agg(topk(col("adc"), col("vec_id")).as("top"))

@@ -253,7 +253,7 @@ object Select {
     * form's kept rows.
     */
   def domainTopK(s: SparkSession, d: String): DataFrame = {
-    val topk = udaf(new graft.functions.TopKAggregator(DomainCap))
+    val topk = udaf(new graft.functions.TopKAggregator(DomainCap, Ordering.Long))
     Tables.documents(s, d)
       .select(col("doc_id"), col("source"), h60(col("text")).as("thash"))
       .groupBy(col("source"))

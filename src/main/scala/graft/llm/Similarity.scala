@@ -640,7 +640,7 @@ object Similarity {
         (0 until ProjK).map(j => col(s"p$j").as(s"qp$j")): _*)
     val pdot = (0 until ProjK).map(j => col(s"p$j") * col(s"qp$j")).reduceLeft(_ + _)
     // COARSE SHORTLIST as a bounded per-query top-k aggregate
-    // ([[graft.functions.TopKDoubleAggregator]], the domainTopK shape)
+    // ([[graft.functions.TopKAggregator]], the domainTopK shape)
     // instead of a rank window: the coarse pass scores ALL N candidates
     // per query BY DESIGN (JL cuts per-pair cost, not candidate count),
     // so the window form shuffled and sorted N·|queries| rows — 800M at
@@ -661,7 +661,8 @@ object Similarity {
     // can overflow only to NaN via 0/0, never to ±∞ at 64 dims of
     // unit-scale doubles. Documented per ADVICE r17 rather than
     // "fixed": a sub-−∞ sentinel does not exist in doubles.
-    val topk = udaf(new graft.functions.TopKDoubleAggregator(ProjShortlist))
+    val topk = udaf(
+      new graft.functions.TopKAggregator(ProjShortlist, Ordering.Double.TotalOrdering))
     val qNarrow = q.select(
       Seq(col("q_id"), col("q_pnrm")) ++ (0 until ProjK).map(j => col(s"qp$j")): _*)
     val pcos = pdot / (col("pnrm") * col("q_pnrm"))

@@ -713,7 +713,7 @@ object TextOps {
     * must elect identical documents.
     */
   def mixTopK(s: SparkSession, d: String): DataFrame = {
-    val topk = udaf(new graft.functions.TopKAggregator(MixK))
+    val topk = udaf(new graft.functions.TopKAggregator(MixK, Ordering.Long))
     val docs = mixDocs(s, d)
     docs.groupBy(col("lang")).agg(topk(col("h"), col("doc_id")).as("top"))
       .join(broadcast(mixTargets(docs).select(col("lang"), col("target"))), Seq("lang"))

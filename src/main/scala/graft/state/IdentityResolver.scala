@@ -34,29 +34,17 @@ object IdentityResolver {
 
   val MaxIters = 15
 
-  /** Below this estimated driver-heap footprint the component
-    * computation runs as a driver-local union-find over the collected
-    * edge list (alias graphs are orders of magnitude smaller than the
-    * event sets they resolve — the reference holds the whole redirect
-    * map in one Durable Object). Above it, the distributed fixpoint
-    * takes over. The bound is on BYTES, not edge count: 5M edges of
-    * 8-char ids and 5M edges of 200-char ids are very different driver
-    * loads, so long ids flip to the distributed path at the same
-    * memory budget.
-    */
-  val LocalHeapBudget: Long = 512L * 1024 * 1024
-
-  /** Edge cap for the single-job quick probe in [[components]]: small
-    * enough that the collect stays tens of MB even with very long ids
-    * (65536 × ~400 B ≈ 25 MB), large enough to cover any realistic
-    * per-micro-batch alias graph in one job.
-    */
-  val QuickProbeEdges: Long = 65536L
-
   /** Retained-heap estimate for the collected edge list + union-find:
     * per edge, two String objects live in the row array and again as
     * map keys (UTF-16 → 2 bytes/char, ×2 copies), plus ~160 B of
-    * object headers, char[] headers, and HashMap entry overhead.
+    * object headers, char[] headers, and HashMap entry overhead. This
+    * is the byte model the local path is budgeted on: below
+    * [[graft.HeapWatermark.Budget]] the components run as a
+    * driver-local union-find over the collected edge list (alias graphs
+    * are orders of magnitude smaller than the event sets they resolve —
+    * the reference holds the whole redirect map in one Durable Object);
+    * above it the distributed fixpoint takes over, so long ids flip to
+    * the distributed path at the same memory budget.
     */
   private[graft] def estimatedHeapBytes(edgeCount: Long, idBytes: Long): Long =
     4L * idBytes + 160L * edgeCount
@@ -104,8 +92,7 @@ object IdentityResolver {
       spark: SparkSession,
       edges: DataFrame,
       labelOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column = IdentityLabel,
-      localHeapBudget: Long = LocalHeapBudget,
-      quickProbeEdges: Long = QuickProbeEdges)
+      localHeapBudget: Long = graft.HeapWatermark.Budget)
     : DataFrame = {
 
     import spark.implicits._
@@ -129,51 +116,18 @@ object IdentityResolver {
         }
       localComponents(pairs, lbl).toDF("id", "canonical")
     }
-    def idChars(rows: Array[org.apache.spark.sql.Row]): Long = rows.iterator
-      .map(r => r.getString(0).length.toLong + r.getString(1).length.toLong).sum
-
-    // ONE job decides the path AND (usually) delivers the data for the
-    // per-micro-batch case: collect up to QuickProbeEdges rows — a cap
-    // whose BYTES stay driver-trivial even with pathological id
-    // lengths, unlike the heap budget's edge-count ceiling (budget/160
-    // ≈ 3.4M edges could be gigabytes of strings; shipping them to
-    // find out they don't fit is the failure mode this cap exists to
-    // avoid). The take subsumes the old empty-batch probe — a quiet
-    // micro-batch returns zero rows from the same job.
-    val maxLocalEdges = math.min(localHeapBudget / 160L, Int.MaxValue - 1L).toInt
-    val quickCap = math.min(maxLocalEdges.toLong, quickProbeEdges).toInt
-    val head = undirected.take(quickCap + 1)
-    // measured watermark for the bench artifact: what this take
-    // actually retained on the driver (HeapWatermark, VERDICT r13 #7)
-    graft.HeapWatermark.record("identity_resolver.quick_probe",
-      estimatedHeapBytes(head.length.toLong, idChars(head)))
-
-    if (head.length <= quickCap) {
-      if (estimatedHeapBytes(head.length, idChars(head)) <= localHeapBudget) {
-        undirected.unpersist()
-        if (head.isEmpty) return Seq.empty[(String, String)].toDF("id", "canonical")
-        return localPath(head.map(r => (r.getString(0), r.getString(1))).toSeq)
-      }
-      // few edges but ids alone blow the budget → distributed fixpoint
-    } else {
-      // spilled past the quick cap: decide with a count+bytes aggregate
-      // BEFORE any large collect, so an over-budget edge set is never
-      // shipped to the driver (long ids flip to the distributed path
-      // without the driver ever holding them)
-      val probe = undirected
-        .agg(count(lit(1)).as("n"),
-          sum(length(col("src")) + length(col("dst"))).cast("long").as("chars"))
-        .head()
-      if (probe.getLong(0) <= maxLocalEdges &&
-          estimatedHeapBytes(probe.getLong(0), probe.getLong(1)) <= localHeapBudget) {
-        val pairs = undirected.take(probe.getLong(0).toInt)
-          .map(r => (r.getString(0), r.getString(1))).toSeq
-        graft.HeapWatermark.record("identity_resolver.local_edges",
-          estimatedHeapBytes(pairs.length.toLong,
-            pairs.iterator.map(p => p._1.length.toLong + p._2.length).sum))
-        undirected.unpersist()
-        return localPath(pairs)
-      }
+    // one bounded collect decides the path: the edge list reaches the
+    // driver iff its modeled heap fits the budget, so an over-budget
+    // edge set is never shipped to find out it does not fit (and a
+    // quiet micro-batch returns zero rows from the same job)
+    val local = graft.HeapWatermark.collectWithin("identity_resolver.local_edges",
+      undirected.rdd.map(r => (r.getString(0), r.getString(1))),
+      (p: (String, String)) => estimatedHeapBytes(1L, p._1.length.toLong + p._2.length),
+      localHeapBudget)
+    if (local.isDefined) {
+      undirected.unpersist()
+      if (local.get.isEmpty) return Seq.empty[(String, String)].toDF("id", "canonical")
+      return localPath(local.get.toSeq)
     }
 
     val e = undirected

@@ -265,37 +265,50 @@ object Replay {
       labelOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column = IdentityResolver.IdentityLabel)
     : Dataset[PersonRecord] = {
     import spark.implicits._
+    withSeqIds(spark, resolvedOps(spark, ops, labelOf)
+      .groupByKey(_.comp)
+      .mapGroups((_, it) => foldComponent(Iterator.empty, it))
+      .rdd)
+  }
 
+  /** The ops keyed by their alias-graph component (CC fixpoint over the
+    * alias edges; ids without alias edges form singleton components),
+    * in the fold's input shape with originals as the resolved ids.
+    */
+  private def resolvedOps(spark: SparkSession, ops: Dataset[PersonOp],
+      labelOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
+    : Dataset[ResolvedOp] = {
+    import spark.implicits._
     // the op table is read twice (alias-edge extraction + the resolved
     // fold input) — persist so an expensive upstream (a full
     // ingest→extraction chain) computes once. The op rows are compact
     // (ids + small maps), a tiny fraction of the event bytes.
     val cached = ops.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
     val edges = cached.filter(_.alias_to.isDefined)
       .map(o => (o.raw_id, o.alias_to.get)).toDF("src", "dst")
     val redirects = IdentityResolver.components(spark, edges, labelOf)
-
-    // component key; ids without alias edges form singleton components
-    val resolved = cached.toDF()
+    cached.toDF()
       .join(broadcast(redirects), col("raw_id") === col("id"), "left")
       .withColumn("comp", coalesce(col("canonical"), col("raw_id")))
       .drop("id", "canonical")
-
-    val folded = resolved
       .select(col("comp"), col("raw_id"), col("ord"), col("set"),
         col("set_once"), col("unset"), col("alias_to"),
         col("raw_id").as("r_raw"), col("alias_to").as("r_alias"))
       .as[ResolvedOp]
-      .groupByKey(_.comp)
-      .mapGroups((_, it) => foldComponent(Iterator.empty, it))
+  }
 
-    // dense first-touch sequence ids: distributed sort + zipWithIndex
-    val withIds = folded.rdd
+  /** Dense first-touch sequence ids (`person_seq_id` from 1 in
+    * `(first_ord, canonical_id)` order): distributed sort +
+    * zipWithIndex. Shared by batch replay and the streaming merge's
+    * final dimension, so both assign identical ids.
+    */
+  private[graft] def withSeqIds(spark: SparkSession,
+      records: org.apache.spark.rdd.RDD[PersonRecord]): Dataset[PersonRecord] = {
+    import spark.implicits._
+    spark.createDataset(records
       .sortBy(r => (r.first_ord, r.canonical_id))
       .zipWithIndex()
-      .map { case (r, i) => r.copy(person_seq_id = i + 1) }
-    spark.createDataset(withIds)
+      .map { case (r, i) => r.copy(person_seq_id = i + 1) })
   }
 
   /** SCD2 person history: one row per op that touched each surviving
@@ -319,18 +332,7 @@ object Replay {
       labelOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column = IdentityResolver.IdentityLabel)
     : Dataset[PersonHistoryRow] = {
     import spark.implicits._
-    val cached = ops.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = cached.filter(_.alias_to.isDefined)
-      .map(o => (o.raw_id, o.alias_to.get)).toDF("src", "dst")
-    val redirects = IdentityResolver.components(spark, edges, labelOf)
-    cached.toDF()
-      .join(broadcast(redirects), col("raw_id") === col("id"), "left")
-      .withColumn("comp", coalesce(col("canonical"), col("raw_id")))
-      .drop("id", "canonical")
-      .select(col("comp"), col("raw_id"), col("ord"), col("set"),
-        col("set_once"), col("unset"), col("alias_to"),
-        col("raw_id").as("r_raw"), col("alias_to").as("r_alias"))
-      .as[ResolvedOp]
+    resolvedOps(spark, ops, labelOf)
       .groupByKey(_.comp)
       .flatMapGroups { (_, it) =>
         val (rec, snaps) = foldComponentImpl(Iterator.empty, it, trace = true)

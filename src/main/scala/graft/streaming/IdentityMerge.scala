@@ -68,14 +68,16 @@ import org.apache.spark.storage.StorageLevel
   * keyed by `batchId`, idempotent like [[graft.sources.Lake]]).
   *
   * Past the driver budget the operator DEGRADES instead of erroring:
-  * each per-epoch dimension is probed (count + chars, no collect)
-  * before it is shipped, and an over-budget dimension flips ITS stage
-  * to a distributed form for that epoch — redirect resolution becomes
-  * two batch-sized join shuffles against the redirect dimension, and a
-  * pathological batch id dimension routes through the SHARED CC
-  * fixpoint ([[IdentityResolver.components]]) with join-based
-  * re-keying (which inherently pays one full-state shuffle to split
-  * touched from untouched). The two probes are independent, so a
+  * each per-epoch dimension reaches the driver through
+  * [[graft.HeapWatermark.collectWithin]] (one job that ships the rows
+  * only when the whole dimension fits), and an over-budget dimension
+  * flips ITS stage to a distributed form for that epoch — redirect
+  * resolution becomes two batch-sized join shuffles against the
+  * redirect dimension, and a pathological batch id dimension routes
+  * through the SHARED CC fixpoint ([[IdentityResolver.components]])
+  * with join-based re-keying (which inherently pays one full-state
+  * shuffle to split touched from untouched). The two collects are
+  * independent, so a
   * 100 TB-scale person dimension with normal micro-batches keeps the
   * narrow no-shuffle state filter and only moves the resolve step off
   * the driver. Distributed epochs pay per-epoch Catalyst planning for
@@ -85,7 +87,7 @@ import org.apache.spark.storage.StorageLevel
   */
 final class IdentityMergeState(
     spark: SparkSession,
-    driverHeapBudget: Long = IdentityResolver.LocalHeapBudget) {
+    driverHeapBudget: Long = graft.HeapWatermark.Budget) {
   import spark.implicits._
 
   private var stateRdd: RDD[PersonRecord] =
@@ -147,33 +149,6 @@ final class IdentityMergeState(
 
   /** Current records (canonical state, `person_seq_id` unassigned). */
   def records: Dataset[PersonRecord] = spark.createDataset(stateRdd)
-
-  /** Probe a per-epoch dimension's driver footprint WITHOUT collecting:
-    * a cheap (count, chars) fold (narrow over the persisted source),
-    * returning whether [[IdentityResolver.estimatedHeapBytes]] fits the
-    * budget. The probe-first contract is shared with
-    * [[IdentityResolver.components]]: an over-budget dimension is never
-    * shipped to the driver to find out it doesn't fit.
-    */
-  private def dimFits[T](rdd: RDD[T], chars: T => Long): Boolean = {
-    val (n, c) = rdd.map(t => (1L, chars(t)))
-      .fold((0L, 0L)) { case ((n1, c1), (n2, c2)) => (n1 + n2, c1 + c2) }
-    IdentityResolver.estimatedHeapBytes(n, c) <= driverHeapBudget
-  }
-
-  /** Collect a probe-approved dimension and record the measured
-    * watermark: the bytes model applied to the rows ACTUALLY retained
-    * (count + exact char sum of the collected array) — the bench
-    * artifact carries the per-site maxima (HeapWatermark).
-    */
-  private def collectMeasured[T: scala.reflect.ClassTag](
-      rdd: RDD[T], chars: T => Long, what: String): Array[T] = {
-    val arr = rdd.collect()
-    graft.HeapWatermark.record(s"identity_merge.$what",
-      IdentityResolver.estimatedHeapBytes(arr.length.toLong,
-        arr.iterator.map(chars).sum))
-    arr
-  }
 
   /** Loud, once-per-epoch note that a dimension outgrew the driver
     * budget and the epoch is running the distributed fallback — the
@@ -240,18 +215,22 @@ final class IdentityMergeState(
       // the state scan entirely.
       val redirectsRdd: RDD[(String, String)] = stateRdd.flatMap(r =>
         r.distinct_ids.filter(_ != r.canonical_id).map(d => (d, r.canonical_id)))
-      val redirectChars = (p: (String, String)) => (p._1.length + p._2.length).toLong
-      val resolved: RDD[(PersonOp, String, Option[String])] =
-        if (epoch < 0L) opsRdd.map(o => (o, o.raw_id, o.alias_to))
-        else if (dimFits(redirectsRdd, redirectChars)) {
-          val rm = collectMeasured(redirectsRdd, redirectChars, "redirect").toMap
-          val rmB = spark.sparkContext.broadcast(rm)
+      val redirects =
+        if (epoch < 0L) Some(Array.empty[(String, String)])
+        else graft.HeapWatermark.collectWithin("identity_merge.redirect", redirectsRdd,
+          (p: (String, String)) =>
+            IdentityResolver.estimatedHeapBytes(1L, p._1.length.toLong + p._2.length),
+          driverHeapBudget)
+      val resolved: RDD[(PersonOp, String, Option[String])] = redirects match {
+        case Some(rm) if rm.isEmpty => opsRdd.map(o => (o, o.raw_id, o.alias_to))
+        case Some(rm) =>
+          val rmB = spark.sparkContext.broadcast(rm.toMap)
           broadcasts += rmB
           opsRdd.map { o =>
             val m = rmB.value
             (o, m.getOrElse(o.raw_id, o.raw_id), o.alias_to.map(a => m.getOrElse(a, a)))
           }
-        } else {
+        case None =>
           noteDegrade(batchId, "redirect")
           // persisted: the alias and plain branches below would otherwise
           // each re-run the raw-side join during materialization
@@ -267,8 +246,8 @@ final class IdentityMergeState(
           val plain = byRaw.filter(_._1.alias_to.isEmpty)
             .map { case (o, rRaw) => (o, rRaw, None: Option[String]) }
           aliased.union(plain)
-        }
-      // persisted: read by the pair probe/collect, the edges, and the fold
+      }
+      // persisted: read by the pair collect, the edges, and the fold
       val resolvedP = resolved.persist(StorageLevel.MEMORY_AND_DISK)
       epochPersists += resolvedP
       mark("resolve")
@@ -286,11 +265,11 @@ final class IdentityMergeState(
       // from untouched records (the price of a state too big to
       // broadcast a touched-set against).
       val pairsRdd = resolvedP.map { case (_, rRaw, rAl) => (rRaw, rAl) }.distinct(batchParts)
-      val pairChars = (p: (String, Option[String])) =>
-        (p._1.length + p._2.map(_.length).getOrElse(0)).toLong
-      val (opRows, untouched, seeds, dimsForDelta) =
-        if (dimFits(pairsRdd, pairChars)) {
-          val pairs = collectMeasured(pairsRdd, pairChars, "batch id-pair")
+      val batchPairs = graft.HeapWatermark.collectWithin("identity_merge.batch id-pair",
+        pairsRdd, (p: (String, Option[String])) => IdentityResolver.estimatedHeapBytes(1L,
+          p._1.length.toLong + p._2.map(_.length).getOrElse(0)), driverHeapBudget)
+      val (opRows, untouched, seeds, dimsForDelta) = batchPairs match {
+        case Some(pairs) =>
           val edges = pairs.iterator.collect {
             case (rRaw, Some(al)) if al != rRaw => (rRaw, al)
           }.toSeq.distinct
@@ -316,7 +295,7 @@ final class IdentityMergeState(
             if (ts.contains(comp)) Some(comp -> r) else None
           }
           (opRows, untouched, seeds, Some((ccMap, touchedSet)))
-        } else {
+        case None =>
           noteDegrade(batchId, "batch id-pair")
           import spark.implicits._
           val edges = resolvedP.flatMap { case (_, rRaw, rAl) =>
@@ -355,7 +334,7 @@ final class IdentityMergeState(
           // no driver-resident dims this epoch → saveDelta falls back
           // to a full base (the touched filter needs them)
           (opRows, untouched, seeds, None)
-        }
+      }
       mark("components")
 
       // RE-KEY + MERGE: only the touched records and the batch's ops
@@ -423,13 +402,7 @@ final class IdentityMergeState(
     * single range-partitioned pass — the ordering contract (first_ord,
     * canonical_id) is what must be preserved, not this implementation.
     */
-  def persons(): Dataset[PersonRecord] = {
-    val withIds = stateRdd
-      .sortBy(r => (r.first_ord, r.canonical_id))
-      .zipWithIndex()
-      .map { case (r, i) => r.copy(person_seq_id = i + 1) }
-    spark.createDataset(withIds)
-  }
+  def persons(): Dataset[PersonRecord] = Replay.withSeqIds(spark, stateRdd)
 
   /** Release the state's cached blocks (end-of-stream cleanup). */
   def close(): Unit = synchronized { stateRdd.unpersist() }

@@ -211,9 +211,8 @@ object StreamQueries {
     */
   def lshGate(s: SparkSession, d: String, chunks: Int = 3): DataFrame = {
     import s.implicits._
-    // budgeted harness collect: ~24 B per (long, int, long) band row
     val bandRows = graft.HeapWatermark.collectMetered("stream_harness.lsh_bands",
-      graft.llm.Dedup.minhashBands(s, d), 24L)
+      graft.llm.Dedup.minhashBands(s, d))
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     val docs = bandRows.map(_._1).distinct.sorted
     val batches = chunk(docs.toSeq, chunks).map { ch =>
@@ -236,9 +235,8 @@ object StreamQueries {
     */
   def sample(s: SparkSession, d: String, chunks: Int = 3): DataFrame = {
     import s.implicits._
-    // budgeted harness collect: 16 B per (long, long) weight row
     val rows = graft.HeapWatermark.collectMetered("stream_harness.sample_weights",
-      graft.llm.Corpus.sampleWeights(s, d), 16L).map(r => (r.getLong(0), r.getLong(1)))
+      graft.llm.Corpus.sampleWeights(s, d)).map(r => (r.getLong(0), r.getLong(1)))
     val batches = chunk(rows.sortBy(_._1).toSeq, chunks)
     val picks = driveBatches(s, batches, Seq("doc_id", "w"), OutputMode.Update(),
       df => Streaming.prioritySampleStream(df.as[(Long, Long)]).toDF())
@@ -269,8 +267,7 @@ object StreamQueries {
     import s.implicits._
     val evDf = Tables.events(s, d)
       .select(col("ts"), col("event_id"), col("user_id"), col("event_type"), col("value"))
-    // budgeted harness collect: ~64 B per event row
-    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf, 64L).map(r =>
+    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf).map(r =>
       (r.getTimestamp(0), r.getLong(1), r.getLong(2), r.getString(3), r.getDouble(4)))
       .sortBy(_._2) // event ids are time-monotone: chunks arrive in event-time order
     val chunked = chunk(rows)
@@ -312,8 +309,7 @@ object StreamQueries {
     val DayUs = 86400000000L
     val evDf = Tables.events(s, d)
       .select(col("ts"), col("event_id"), col("event_type"))
-    // budgeted harness collect: ~48 B per event row
-    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf, 48L).map(r =>
+    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf).map(r =>
       (r.getTimestamp(0), r.getLong(1), r.getString(2)))
       .sortBy(_._2) // event ids are time-monotone: chunks arrive in event-time order
     val maxTs = rows.last._1
@@ -347,8 +343,7 @@ object StreamQueries {
     val evDf = Tables.events(s, d)
       .filter(col("event_type").isin("view", "click", "purchase"))
       .select(col("ts"), col("event_id"), col("user_id"), col("event_type"))
-    // budgeted harness collect: ~56 B per event row
-    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf, 56L).map(r =>
+    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf).map(r =>
       (r.getTimestamp(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .sortBy(_._2) // event ids are time-monotone: chunks arrive in event-time order
     val maxTs = rows.map(_._1.getTime).max
@@ -378,8 +373,7 @@ object StreamQueries {
     import s.implicits._
     val evDf = Tables.events(s, d)
       .select(col("ts"), col("event_id"), col("user_id"), col("event_type"))
-    // budgeted harness collect: ~56 B per event row
-    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf, 56L).map(r =>
+    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf).map(r =>
       (r.getTimestamp(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .sortBy(_._2) // event ids are time-monotone: chunks arrive in event-time order
     val maxTs = rows.map(_._1.getTime).max
@@ -410,8 +404,7 @@ object StreamQueries {
   def anomaly(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val evDf = Tables.events(s, d).select(col("ts"), col("event_id"))
-    // budgeted harness collect: ~24 B per event row
-    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf, 24L)
+    val rows = graft.HeapWatermark.collectMetered("stream_harness.events", evDf)
       .map(r => (r.getTimestamp(0), r.getLong(1)))
       .sortBy(_._2) // event ids are time-monotone: chunks arrive in event-time order
     val maxTs = rows.map(_._1.getTime).max

@@ -385,19 +385,13 @@ object Streaming {
     * cross-batch merges of already-materialized records (keyed state
     * cannot reach across keys).
     */
-  /** The same person fold on Spark 4's `transformWithState` API — a
-    * [[StatefulProcessor]] with an explicit [[ValueState]] handle (the
-    * state-store-v2 path: per-state-variable columns in RocksDB,
-    * timers/TTL available). Shares [[Replay.applyUpdate]] with batch
-    * replay and the fMGWS twin; StreamingSpec pins all three to agree.
-    */
   /** Fresh (never-folded) record for a key — the fold's identity. */
   private[streaming] def emptyPerson(key: String): PersonRecord =
     PersonRecord(key, -1L, 0L, Seq(key), Map.empty, Map.empty, Long.MaxValue)
 
   /** ONE keyed-fold step: previous record + this micro-batch's ops
     * (sorted by `ord` inside) → next record. The single definition
-    * shared by the fMGWS twin and both transformWithState processors
+    * shared by the fMGWS twin and the transformWithState processor
     * (and, through [[Replay.applyUpdate]], batch replay), so the fold
     * cannot drift between execution strategies.
     */
@@ -423,23 +417,14 @@ object Streaming {
       properties = props, properties_set_once = setOnce, first_ord = firstOrd)
   }
 
-  class PersonStateProcessor extends StatefulProcessor[String, PersonOp, PersonRecord] {
-    @transient private var state: ValueState[PersonRecord] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[PersonRecord](
-        "person", Encoders.product[PersonRecord], org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String, rows: Iterator[PersonOp],
-        timerValues: TimerValues): Iterator[PersonRecord] = {
-      val next = foldPersonOps(Option(state.get()).getOrElse(emptyPerson(key)), rows)
-      state.update(next)
-      Iterator.single(next)
-    }
-  }
-
-  /** TTL-evicting person state with lake rehydration — the 100 TB
+  /** The same person fold on Spark 4's `transformWithState` API — a
+    * [[StatefulProcessor]] with an explicit [[ValueState]] handle (the
+    * state-store-v2 path: per-state-variable columns in RocksDB,
+    * timers/TTL available). Shares [[Replay.applyUpdate]] with batch
+    * replay and the fMGWS twin; StreamingSpec pins all three to agree.
+    * A zero `ttl` is no TTL ([[personStateTws]]).
+    *
+    * TTL-evicting person state with lake rehydration — the 100 TB
     * keyed-state story made executable: RocksDB state is a CACHE over
     * the authoritative person table checkpointed to the lake each
     * epoch (the foreachBatch sink pattern), not the system of record.
@@ -732,11 +717,14 @@ object Streaming {
       }
   }
 
-  /** transformWithState wiring of [[PersonStateProcessor]]. */
+  /** transformWithState wiring of the person fold without eviction:
+    * [[PersonStateTtlProcessor]] with no TTL, so nothing ever needs
+    * rehydrating.
+    */
   def personStateTws(ops: Dataset[PersonOp]): Dataset[PersonRecord] = {
     import ops.sparkSession.implicits._
     ops.groupByKey(_.raw_id)
-      .transformWithState(new PersonStateProcessor,
+      .transformWithState(new PersonStateTtlProcessor(java.time.Duration.ZERO, _ => None),
         TimeMode.None(), OutputMode.Update())
   }
 

@@ -560,8 +560,8 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     * with its per-group bound. Everything else buffers a whole group on
     * one executor — the unbounded state the session-wide 65,536-key
     * ObjectHashAggregate fallback threshold would otherwise hide. The
-    * k-bounded typed aggregators (`TopKAggregator`, `TopKDoubleAggregator`)
-    * are not collects and need no entry.
+    * k-bounded typed aggregator (`TopKAggregator`) is not a collect and
+    * needs no entry.
     */
   private val boundedCollects: Map[String, String] = {
     val buckets = s"BucketedOrder bucket table: <= ${graft.plans.BucketedOrder.DefaultBuckets} " +

@@ -377,19 +377,30 @@ class StateSpec extends AnyFunSuite with SparkSuite {
     assert(canon.values.toSet == Set(center)) // one star, min label
   }
 
-  test("CC probe: graphs past the quick cap take the budget-checked local path") {
+  test("CC second collect: a partition over its budget share still resolves locally") {
     import spark.implicits._
-    // the quick single-job probe is byte-bounded; a graph that spills
-    // past it must be sized by the count+bytes AGGREGATE (never a blind
-    // oversized collect) and, when under budget, still resolve locally
+    // the budget equals the edges' modeled total, so it fits, but its
+    // per-partition share (budget / 2) is below the larger partition's
+    // edges (5 equal edges over 2 partitions): that task ships only its
+    // byte sum and the driver collects again instead of degrading
     val edges = Seq(
       ("b", "a"), ("c", "b"), ("x", "y"), ("m", "n"), ("n", "o")).toDF("src", "dst")
-    val viaAggProbe = IdentityResolver.components(spark, edges, quickProbeEdges = 2)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val direct = IdentityResolver.components(spark, edges)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(viaAggProbe == direct)
-    assert(viaAggProbe("c") == "a" && viaAggProbe("o") == "m")
+    val budget = IdentityResolver.estimatedHeapBytes(5L, 10L)
+    def resolve(localHeapBudget: Long): (Map[String, String], Int) = {
+      var out: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsDuring {
+        out = IdentityResolver.components(spark, edges, localHeapBudget = localHeapBudget)
+      }
+      (out.collect().map(r => r.getString(0) -> r.getString(1)).toMap, jobs)
+    }
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    val ((viaSecondCollect, secondJobs), (direct, directJobs)) =
+      try (resolve(budget), resolve(graft.HeapWatermark.Budget))
+      finally spark.conf.unset(coalesce)
+    assert(viaSecondCollect == direct)
+    assert(viaSecondCollect("c") == "a" && viaSecondCollect("o") == "m")
+    assert(secondJobs == directJobs + 1) // local, not the distributed fixpoint
   }
 
   test("out-of-order ops fold by ord, not arrival order") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,37 +16,6 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def tmpDir(): String = Files.createTempDirectory("graft-tables").toString
-
-  /** Spark jobs started while `body` runs on this thread. Jobs carry a
-    * per-probe local property; a sentinel job started afterwards under
-    * another tag is awaited, and the bus delivers events in order, so
-    * every job of `body` has been counted by then.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val key = "graft.tablesspec.probe"
-    val probe = s"probe-${System.nanoTime()}"
-    val sentinel = s"sentinel-${System.nanoTime()}"
-    val seen = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
-          .foreach(seen.merge(_, 1, (a, b) => a + b))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, probe)
-      try body finally sc.setLocalProperty(key, sentinel)
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.containsKey(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.containsKey(sentinel), "listener bus did not deliver the sentinel job")
-      Option(seen.get(probe)).fold(0)(_.intValue)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("a repeat load of a table starts no Spark job") {
     val dir = tmpDir()

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.TopKDoubleAggregator
+import graft.functions.TopKAggregator
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,7 +32,7 @@ class TopKDoubleSpec extends AnyFunSuite {
   }
 
   test("reduce over any input order equals global sorted take(k)") {
-    val agg = new TopKDoubleAggregator(5)
+    val agg = new TopKAggregator(5, Ordering.Double.TotalOrdering)
     check(Prop.forAll(rowsGen) { rows =>
       val got = rows.foldLeft(agg.zero)(agg.reduce)
       // == on NaN-bearing tuples fails via primitive equality; compare
@@ -44,7 +44,7 @@ class TopKDoubleSpec extends AnyFunSuite {
   }
 
   test("merge of arbitrary partition splits equals the unpartitioned fold") {
-    val agg = new TopKDoubleAggregator(3)
+    val agg = new TopKAggregator(3, Ordering.Double.TotalOrdering)
     check(Prop.forAll(rowsGen, Gen.chooseNum(0, 10)) { (rows, nSplits) =>
       val parts =
         if (rows.isEmpty || nSplits == 0) Seq(rows)
@@ -61,7 +61,7 @@ class TopKDoubleSpec extends AnyFunSuite {
   test("negated-score key reproduces (score DESC, id ASC) incl. -0.0/0.0") {
     // the projectSearch encoding: key = -score (NaN pre-mapped by the
     // caller). DESC rank-window order == ASC TotalOrdering on -score.
-    val agg = new TopKDoubleAggregator(4)
+    val agg = new TopKAggregator(4, Ordering.Double.TotalOrdering)
     val scores = List((0.0, 7L), (-0.0, 3L), (1.5, 2L), (1.5, 1L), (-2.0, 9L))
     val keyed = scores.map { case (sc, id) => (-sc, id) }
     val got = keyed.foldLeft(agg.zero)(agg.reduce).map { case (k, id) => id }

@@ -22,7 +22,7 @@ class TopKSpec extends AnyFunSuite {
   }
 
   test("reduce over any input order equals global sorted take(k)") {
-    val agg = new TopKAggregator(5)
+    val agg = new TopKAggregator(5, Ordering.Long)
     check(Prop.forAll(rowsGen) { rows =>
       val got = rows.foldLeft(agg.zero)(agg.reduce)
       got == rows.sorted.take(5)
@@ -30,7 +30,7 @@ class TopKSpec extends AnyFunSuite {
   }
 
   test("merge of arbitrary partition splits equals the unpartitioned fold") {
-    val agg = new TopKAggregator(3)
+    val agg = new TopKAggregator(3, Ordering.Long)
     check(Prop.forAll(rowsGen, Gen.chooseNum(0, 10)) { (rows, nSplits) =>
       val parts =
         if (rows.isEmpty || nSplits == 0) Seq(rows)
@@ -43,7 +43,7 @@ class TopKSpec extends AnyFunSuite {
   }
 
   test("duplicate rows are retained up to k (multiset, not set, semantics)") {
-    val agg = new TopKAggregator(4)
+    val agg = new TopKAggregator(4, Ordering.Long)
     val rows = List((1L, 1L), (1L, 1L), (1L, 1L), (2L, 2L), (0L, 9L))
     assert(rows.foldLeft(agg.zero)(agg.reduce) ==
       List((0L, 9L), (1L, 1L), (1L, 1L), (1L, 1L)))
