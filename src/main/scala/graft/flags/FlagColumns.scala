@@ -208,28 +208,14 @@ object FlagColumns {
   def enabledCol(frame: FlagFrame, flag: FeatureFlag): Column =
     resultCol(frame, flag).getField("enabled")
 
-  /** Selected variant key (null = none picked / disabled). */
-  def variantCol(frame: FlagFrame, flag: FeatureFlag): Column =
-    resultCol(frame, flag).getField("variant")
-
-  /** Back-compat person-only entry point. */
-  def enabledCol(distinctId: Column, props: Column, flag: FeatureFlag): Column =
-    enabledCol(FlagFrame(distinctId, props), flag)
-
-  /** F2 for the vectorized path: delegates flag selection to
-    * [[FlagEval.selectFlags]] so a bulk backfill evaluates exactly the
+  /** One result column per SELECTED flag, aliased by flag key — the
+    * vectorized twin of [[FlagEval.evaluate]]. Selection is
+    * [[FlagEval.selectFlags]], so a bulk backfill evaluates exactly the
     * flag set the scalar serving loop would — `flag_keys` and
     * `evaluation_environments` filter the CONFIG once, before any
-    * Column is built (no per-row cost, no hand pre-filtering).
-    */
-  def selectFlags(flags: Seq[FeatureFlag],
-      options: FlagEvalOptions = FlagEvalOptions()): Seq[FeatureFlag] =
-    FlagEval.selectFlags(flags, options)
-
-  /** One result column per SELECTED flag, aliased by flag key — the
-    * vectorized twin of [[FlagEval.evaluate]].
+    * Column is built.
     */
   def resultCols(frame: FlagFrame, flags: Seq[FeatureFlag],
       options: FlagEvalOptions = FlagEvalOptions()): Seq[Column] =
-    selectFlags(flags, options).map(f => resultCol(frame, f).as(f.key))
+    FlagEval.selectFlags(flags, options).map(f => resultCol(frame, f).as(f.key))
 }

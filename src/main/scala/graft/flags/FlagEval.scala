@@ -198,7 +198,7 @@ object FlagEval {
     * filtering (`feature_flags.rs:43-67,474-479`). A property of the
     * CONFIG, not the execution strategy — shared by the scalar
     * [[evaluate]] loop and vectorized backfill drivers
-    * ([[FlagColumns.selectFlags]] delegates here), so a backfill
+    * ([[FlagColumns.resultCols]] selects through here), so a backfill
     * evaluates exactly the flag set serving would.
     */
   def selectFlags(flags: Seq[FeatureFlag],

@@ -66,7 +66,8 @@ object Normalizer {
     * ACCEPTED TRADEOFF: two genuinely distinct events whose wire bodies
     * are byte-identical (no client uuid/timestamp — e.g. two rapid
     * identical clicks in separate requests) hash to the same uuid and
-    * collapse to one row at the Lake's dedup — at-most-once for
+    * collapse to one row at the landing's `dropDuplicates("uuid")`
+    * (see [[graft.sources.Lake]]) — at-most-once for
     * payload-identical events, vs the reference's random-v4 which keeps
     * both but duplicates on retry. Deployments that need both
     * behaviors should mix a source offset (kafka partition/offset,

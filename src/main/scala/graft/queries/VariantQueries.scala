@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * (VERDICT r14 #5). SURVEY §4 measured stored `VariantType` 1.2–1.8×
   * faster than string+`get_json_object` on props probes and recorded
   * it as the recommended production layout
-  * ([[graft.sources.Lake.writeEventsVariant]]) — but no gated artifact
+  * ([[graft.sources.Lake.atRest]]) — but no gated artifact
   * actually ran over stored Variant. These twins close that gap: each
   * scans ONE scratch table holding the JSON payload BOTH ways (the
   * original string and the ingest-time `try_parse_json` variant,

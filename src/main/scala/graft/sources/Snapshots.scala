@@ -22,8 +22,7 @@ import scala.jdk.CollectionConverters._
   *     run can pin the exact corpus version it saw;
   *   - **O(metadata) mutation** — compaction, rollback and
   *     copy-on-write delete commit a new FILE LIST; untouched data is
-  *     never copied (contrast [[Lake.deleteSweep]]'s no-catalog
-  *     filesystem copies — with a manifest, retention is free);
+  *     never copied — with a manifest, retention is free;
   *   - **optimistic concurrency** — two writers racing to version N:
   *     one wins the atomic claim, the loser gets
   *     [[Snapshots.ConcurrentCommitException]] and retries on the new
@@ -121,15 +120,30 @@ object Snapshots {
   def snapshots(spark: SparkSession, dir: String): Seq[Snapshot] =
     committedVersions(spark, dir).map(v => readManifest(spark, dir, v))
 
-  private def readManifest(spark: SparkSession, dir: String, v: Long): Snapshot = {
-    val p = manifestPath(dir, v)
+  /** Parse one metadata JSON file (manifest or staging manifest). */
+  private def readJson(spark: SparkSession, dir: String, p: HPath) = {
     val in = fs(spark, dir).open(p)
-    val bytes = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-      bos.toByteArray
-    } finally in.close()
-    val n = M.readTree(bytes)
+    try M.readTree(in) finally in.close()
+  }
+
+  /** Write `df` into a fresh immutable `data/<id>` directory: one write
+    * job and one listing. Returns the id and the directory's parquet
+    * files as table-root-relative, sorted paths.
+    */
+  private def writeDataFiles(spark: SparkSession, dir: String, df: DataFrame)
+      : (String, Seq[String]) = {
+    val id = java.util.UUID.randomUUID().toString.take(12)
+    val dataRel = s"data/$id"
+    df.write.mode("overwrite").parquet(new HPath(dir, dataRel).toString)
+    val files = fs(spark, dir).listStatus(new HPath(dir, dataRel)).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map(st => s"$dataRel/${st.getPath.getName}")
+      .sorted
+    (id, files)
+  }
+
+  private def readManifest(spark: SparkSession, dir: String, v: Long): Snapshot = {
+    val n = readJson(spark, dir, manifestPath(dir, v))
     val stats: Map[String, Map[String, (Long, Long)]] =
       Option(n.get("stats")).map { sn =>
         sn.properties().asScala.map { e =>
@@ -200,14 +214,7 @@ object Snapshots {
   def commit(spark: SparkSession, dir: String, df: DataFrame,
       operation: String = "append", replace: Boolean = false,
       setProps: Map[String, String] = Map.empty): Snapshot = {
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"data/$commitId"
-    df.write.mode("overwrite").parquet(new HPath(dir, dataRel).toString)
-    val f = fs(spark, dir)
-    val newFiles = f.listStatus(new HPath(dir, dataRel)).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(st => s"$dataRel/${st.getPath.getName}")
-      .sorted
+    val (_, newFiles) = writeDataFiles(spark, dir, df)
     commitFiles(spark, dir, newFiles, operation, replace, setProps)
   }
 
@@ -361,9 +368,8 @@ object Snapshots {
 
   /** Copy-on-write DELETE: rewrite ONLY the data files that contain
     * matching rows; every untouched file is carried into the new
-    * manifest BY REFERENCE (zero copy — the catalog-lake shape of
-    * [[Lake.deleteSweep]], where untouched partitions cost a
-    * filesystem copy). Affected files are found with one
+    * manifest BY REFERENCE (zero copy — the catalog-lake form of a
+    * GDPR right-to-be-forgotten sweep). Affected files are found with one
     * `input_file_name()` scan of the predicate columns; at 100 TB
     * the predicate's pushed filters prune most row groups before the
     * match ever evaluates.
@@ -385,20 +391,13 @@ object Snapshots {
     if (affectedRel.isEmpty)
       return commitFiles(spark, dir, cur.files, "delete[noop]", replace = true)
     val keep = cur.files.diff(affectedRel)
-    // rewrite the surviving rows OF THE AFFECTED FILES only
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"data/$commitId"
+    // rewrite the surviving rows OF THE AFFECTED FILES only.
     // SQL DELETE removes rows where pred IS TRUE; rows where it
     // evaluates NULL must SURVIVE. A bare !pred maps NULL→NULL and the
     // filter would silently drop them — keep rows where pred is not true.
-    spark.read.parquet(affectedRel.map(r => new HPath(dir, r).toString): _*)
-      .filter(!coalesce(pred, lit(false)))
-      .write.mode("overwrite").parquet(new HPath(dir, dataRel).toString)
-    val f = fs(spark, dir)
-    val rewritten = f.listStatus(new HPath(dir, dataRel)).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(st => s"$dataRel/${st.getPath.getName}")
-      .sorted
+    val (_, rewritten) = writeDataFiles(spark, dir,
+      spark.read.parquet(affectedRel.map(r => new HPath(dir, r).toString): _*)
+        .filter(!coalesce(pred, lit(false))))
     commitFiles(spark, dir, keep ++ rewritten, "delete", replace = true)
   }
 
@@ -445,14 +444,7 @@ object Snapshots {
       else spark.read.parquet(affectedRel.map(r => new HPath(dir, r).toString): _*)
         .join(srcKeys, keyCols, "left_anti")
         .unionByName(source.select(df.columns.map(col): _*))
-    val commitId = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"data/$commitId"
-    rewrite.write.mode("overwrite").parquet(new HPath(dir, dataRel).toString)
-    val f = fs(spark, dir)
-    val rewritten = f.listStatus(new HPath(dir, dataRel)).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(st => s"$dataRel/${st.getPath.getName}")
-      .sorted
+    val (_, rewritten) = writeDataFiles(spark, dir, rewrite)
     commitFiles(spark, dir, keep ++ rewritten, operation, replace = true, setProps)
   }
 
@@ -594,9 +586,8 @@ object Snapshots {
     * snapshot whose operation tag embeds the batch id. A
     * failure-replayed epoch (the checkpoint re-delivers the last
     * uncommitted batch) finds its tag already committed and SKIPS —
-    * the manifest is the transaction log, upgrading the bare-parquet
-    * [[Lake.streamWriter]]'s overwrite-idempotency to true
-    * exactly-once (the Iceberg streaming-commit contract). Readers
+    * the manifest is the transaction log, so a replay never
+    * duplicates (the Iceberg streaming-commit contract). Readers
     * concurrently replanning `read(dir)` never see a half-written
     * epoch: its files are unreferenced until the atomic manifest
     * publish.
@@ -694,14 +685,8 @@ object Snapshots {
     * [[removeOrphans]]). Returns the stage id.
     */
   def stageWrite(spark: SparkSession, dir: String, df: DataFrame): String = {
-    val id = java.util.UUID.randomUUID().toString.take(12)
-    val dataRel = s"data/$id"
-    df.write.mode("overwrite").parquet(new HPath(dir, dataRel).toString)
+    val (id, files) = writeDataFiles(spark, dir, df)
     val f = fs(spark, dir)
-    val files = f.listStatus(new HPath(dir, dataRel)).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(st => s"$dataRel/${st.getPath.getName}")
-      .sorted
     val node: ObjectNode = M.createObjectNode()
     node.put("stage_id", id)
     node.put("timestamp_ms", System.currentTimeMillis())
@@ -716,15 +701,8 @@ object Snapshots {
 
   private def stagedFiles(spark: SparkSession, dir: String, id: String): Seq[String] = {
     val p = stagedPath(dir, id)
-    val f = fs(spark, dir)
-    require(f.exists(p), s"stage $id does not exist (published or discarded?)")
-    val in = f.open(p)
-    val bytes = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 8192, false)
-      bos.toByteArray
-    } finally in.close()
-    M.readTree(bytes).get("files").elements().asScala.map(_.asText()).toSeq
+    require(fs(spark, dir).exists(p), s"stage $id does not exist (published or discarded?)")
+    readJson(spark, dir, p).get("files").elements().asScala.map(_.asText()).toSeq
   }
 
   /** The staged rows (audit view) — invisible to [[read]] until

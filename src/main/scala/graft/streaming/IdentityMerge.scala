@@ -65,7 +65,8 @@ import org.apache.spark.storage.StorageLevel
   * only touched records and the batch's ops shuffle into the cogroup,
   * and lineage is cut per epoch by re-rooting the state RDD (locally
   * here; a production deployment writes the epoch delta to the lake
-  * keyed by `batchId`, idempotent like [[graft.sources.Lake]]).
+  * keyed by `batchId`, exactly-once like
+  * [[graft.sources.Snapshots.commitEpoch]]).
   *
   * Past the driver budget the operator DEGRADES instead of erroring:
   * each per-epoch dimension reaches the driver through
@@ -413,7 +414,7 @@ final class IdentityMergeState(
     * (or every k batches) from the foreachBatch sink. A full snapshot
     * per epoch is the simple form; at lake scale the same layout holds
     * per-epoch DELTAS (only touched records change per batch —
-    * compaction then mirrors [[graft.sources.Lake]]).
+    * compaction then mirrors [[graft.sources.Snapshots.compactSnapshot]]).
     */
   def save(dir: String): Unit = synchronized {
     if (epoch >= 0) {
@@ -439,7 +440,7 @@ final class IdentityMergeState(
     * survivor's redirect from then on.) Periodic compaction = [[save]]
     * (a fresh full base; later [[IdentityMergeState.restoreDeltas]]
     * reads only deltas newer than the newest base), mirroring
-    * [[graft.sources.Lake.compact]].
+    * [[graft.sources.Snapshots.compactSnapshot]].
     */
   def saveDelta(dir: String): Unit = synchronized {
     if (epoch < 0) return

@@ -2,7 +2,7 @@ package graft
 
 import graft.ingest.{Codecs, Normalizer}
 import graft.ingest.Normalizer.IngestContext
-import graft.sources.Lake
+import graft.sources.{Lake, Snapshots}
 import graft.state.{PersonOp, PersonOpExtract, Replay}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -103,8 +103,8 @@ class EndToEndSpec extends AnyFunSuite with SparkSuite {
 
     // lake round-trip
     val dir = Files.createTempDirectory("e2e").toString
-    Lake.writeEvents(canonical, dir)
-    assert(Lake.readEvents(spark, dir).count() == 8)
+    Snapshots.commit(spark, dir, Lake.atRest(canonical.dropDuplicates("uuid")))
+    assert(Snapshots.read(spark, dir).count() == 8)
 
     // ---- person replay from the REAL extraction over the landed events
     // (T1: no hand-built ops — ingest output drives the state machine)

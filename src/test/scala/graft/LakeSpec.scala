@@ -2,7 +2,9 @@ package graft
 
 import graft.ingest.Normalizer
 import graft.ingest.Normalizer.IngestContext
-import graft.sources.Lake
+import graft.sources.{Lake, Snapshots}
+import graft.streaming.Streaming
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -19,23 +21,6 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
         "created_at", "properties", "api_key")
   }
 
-  test("partitioned append + read-back + partition pruning layout") {
-    val dir = Files.createTempDirectory("lake").toString
-    val events = canonical(
-      """{"event":"a","distinct_id":"d1","timestamp":"2024-03-01T00:00:00Z"}""",
-      """{"event":"b","distinct_id":"d2","timestamp":"2024-03-02T00:00:00Z"}""")
-    Lake.writeEvents(events, dir)
-    // hive-style partition dirs by event day
-    val parts = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("event_date=")).sorted
-    assert(parts.toSeq == Seq("event_date=2024-03-01", "event_date=2024-03-02"))
-    val back = Lake.readEvents(spark, dir)
-    assert(back.count() == 2)
-    // timestamp-less events partition by created_at (server now)
-    Lake.writeEvents(canonical("""{"event":"c","distinct_id":"d3"}"""), dir)
-    assert(Lake.readEvents(spark, dir)
-      .filter(col("event_date") === "2024-03-05").count() == 1)
-  }
-
   test("variant at-rest layout: probes agree with the string layout; malformed JSON survives as NULL variant") {
     import org.apache.spark.sql.types.VariantType
     val sdir = Files.createTempDirectory("lake_s").toString
@@ -43,12 +28,12 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     val events = canonical(
       """{"event":"a","distinct_id":"d1","timestamp":"2024-03-01T00:00:00Z","properties":{"k":7,"s":"x"}}""",
       """{"event":"b","distinct_id":"d2","timestamp":"2024-03-02T00:00:00Z","properties":{"k":9}}""")
-    // string layout is now the explicit OPT-OUT (variant is the default
-    // at-rest layout since r16); the comparison needs one of each
-    Lake.writeEvents(events, sdir, variantAtRest = false)
-    Lake.writeEventsVariant(events, vdir)
-    val s = Lake.readEvents(spark, sdir)
-    val v = Lake.readEvents(spark, vdir)
+    // the string layout is the canonical frame as ingested; the landed
+    // layout is Lake.atRest — the comparison needs one of each
+    Snapshots.commit(spark, sdir, events.dropDuplicates("uuid"))
+    Snapshots.commit(spark, vdir, Lake.atRest(events.dropDuplicates("uuid")))
+    val s = Snapshots.read(spark, sdir)
+    val v = Snapshots.read(spark, vdir)
     // the payload column landed as a real parquet VariantType
     assert(v.schema("properties").dataType.isInstanceOf[VariantType],
       s"expected VariantType, got ${v.schema("properties").dataType}")
@@ -60,111 +45,18 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), Option(r.getString(2)))).toSet
     assert(probed(s) == probed(v))
     assert(probed(v) == Set(("d1", 7L, Some("x")), ("d2", 9L, None)))
-    // partition layout unchanged: pruning still works on the variant lake
-    assert(v.filter(col("event_date") === "2024-03-01").count() == 1)
+    assert(v.filter(to_date(col("timestamp")) === "2024-03-01").count() == 1)
     // a malformed payload survives ingest as a NULL variant row
-    import spark.implicits._
     val broken = events.limit(1)
       .withColumn("properties", lit("{not json"))
       .withColumn("uuid", lit("u-broken"))
-    Lake.writeEventsVariant(broken, vdir)
-    val vb = Lake.readEvents(spark, vdir)
+    Snapshots.commit(spark, vdir, Lake.atRest(broken.dropDuplicates("uuid")))
+    val vb = Snapshots.read(spark, vdir)
     assert(vb.count() == 3)
     assert(vb.filter(col("properties").isNull).count() == 1)
   }
 
-  test("idempotent replay: duplicate uuids dropped within an append") {
-    val dir = Files.createTempDirectory("lake").toString
-    val events = canonical(
-      """{"event":"a","distinct_id":"d1","timestamp":"2024-03-01T00:00:00Z"}""")
-    // same payload twice in one batch → same deterministic uuid → one row
-    Lake.writeEvents(events.union(events), dir)
-    assert(Lake.readEvents(spark, dir).count() == 1)
-  }
-
-  test("GDPR deletion sweep: subjects' rows gone, untouched partitions copied not rewritten, audit exact") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("lake").toString
-    val out = Files.createTempDirectory("lake_d").toString
-    // d1 on two days, d2 on one of them, d3 alone on a third day
-    Lake.writeEvents(canonical(
-      """{"event":"a","distinct_id":"d1","timestamp":"2024-03-01T00:00:00Z"}""",
-      """{"event":"b","distinct_id":"d2","timestamp":"2024-03-01T01:00:00Z"}""",
-      """{"event":"c","distinct_id":"d1","timestamp":"2024-03-02T00:00:00Z"}""",
-      """{"event":"d","distinct_id":"d3","timestamp":"2024-03-03T00:00:00Z"}"""), dir)
-    def files(base: String, part: String) =
-      new java.io.File(s"$base/event_date=$part").listFiles()
-        .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq
-    val untouchedBefore = files(dir, "2024-03-03")
-    val audit = Lake.deleteSweep(spark, dir, out, Seq("d1").toDF("distinct_id"))
-      .collect().map(r => (r.get(0).toString, r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._1)
-    // audit: both affected days, exact deleted counts
-    assert(audit.toSeq == Seq(
-      ("2024-03-01", 2L, 1L, 1L), ("2024-03-02", 1L, 0L, 1L)))
-    val back = Lake.readEvents(spark, out)
-    assert(back.filter(col("distinct_id") === "d1").count() == 0)
-    assert(back.count() == 2) // d2 + d3 survive
-    // the untouched partition was COPIED (same file names), not rewritten
-    assert(files(out, "2024-03-03") == untouchedBefore)
-    // the affected-partition rewrite scan prunes on event_date
-    val plan = spark.read.parquet(dir)
-      .filter(col("event_date").isin("2024-03-01", "2024-03-02"))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan.take(800))
-  }
-
-  test("compaction: many small appends → one file per date partition") {
-    val dir = Files.createTempDirectory("lake").toString
-    val out = Files.createTempDirectory("lake_c").toString
-    // 3 appends into the same date → 3+ files in that partition
-    (1 to 3).foreach { i =>
-      Lake.writeEvents(canonical(
-        s"""{"event":"e$i","distinct_id":"d$i","timestamp":"2024-03-01T0$i:00:00Z"}"""), dir)
-    }
-    def parquetFiles(base: String) =
-      new java.io.File(s"$base/event_date=2024-03-01").listFiles()
-        .count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles(dir) >= 3)
-    Lake.compact(spark, dir, out, parallelism = 2)
-    assert(parquetFiles(out) == 1)
-    assert(Lake.readEvents(spark, out).count() == 3)
-  }
-
-  test("streaming epochs land in epoch_id dirs; replayed epochs overwrite, not append") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = Files.createTempDirectory("lake_s").toString
-    val events = canonical(
-      """{"event":"a","distinct_id":"d1","timestamp":"2024-03-01T00:00:00Z"}""",
-      """{"event":"b","distinct_id":"d2","timestamp":"2024-03-02T00:00:00Z"}""").collect()
-
-    def runOnce(checkpoint: String): Unit = {
-      implicit val sqlCtx = spark.sqlContext
-      val ms = MemoryStream[String]
-      ms.addData("tick")
-      val stream = ms.toDF().select(lit(1).as("tick"))
-        .crossJoin(spark.createDataFrame(spark.sparkContext.parallelize(events.toSeq),
-          canonical("""{"event":"x","distinct_id":"d"}""").schema))
-        .drop("tick")
-      Lake.streamWriter(stream, dir, checkpoint).start().awaitTermination()
-    }
-
-    runOnce(Files.createTempDirectory("ck1").toString)
-    assert(new java.io.File(dir).listFiles().exists(_.getName == "epoch_id=0"))
-    assert(Lake.readEvents(spark, dir).count() == 2)
-    // a FRESH checkpoint replays the same data as epoch 0 again — the
-    // overwrite converges instead of duplicating (at-least-once → idempotent)
-    runOnce(Files.createTempDirectory("ck2").toString)
-    assert(Lake.readEvents(spark, dir).count() == 2)
-    // compaction folds the epoch level away
-    val out = Files.createTempDirectory("lake_sc").toString
-    Lake.compact(spark, dir, out, parallelism = 2)
-    assert(!Lake.readEvents(spark, out).columns.contains("epoch_id"))
-    assert(Lake.readEvents(spark, out).count() == 2)
-  }
-
-  test("file-source stream lands in the lake: eventStream → streamWriter == batch") {
+  test("file-source stream lands in the lake: eventStream → streamCommitWriter") {
     val src = Files.createTempDirectory("lakesrc").toString
     val lake = Files.createTempDirectory("lakedst").toString
     val ckpt = Files.createTempDirectory("lakeck").toString
@@ -174,17 +66,18 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     // the files an upstream collector would drop (createTempDirectory
     // made the dir, so the JSON write must overwrite it)
     events.write.mode("overwrite").json(src)
-    val q = graft.sources.Lake.streamWriter(
-      graft.streaming.Streaming.eventStream(spark, src), lake, ckpt).start()
-    q.awaitTermination(60000)
-    val back = spark.read.parquet(lake)
+    def land(): Unit = Snapshots.streamCommitWriter(
+      Lake.atRest(Streaming.eventStream(spark, src)), lake, ckpt)
+      .start().awaitTermination(60000)
+    land()
+    val back = Snapshots.read(spark, lake)
     assert(back.count() == 2)
     assert(back.select("event").collect().map(_.getString(0)).toSet == Set("s1", "s2"))
-    // second run over the same checkpoint: no new files → no duplicates
-    val q2 = graft.sources.Lake.streamWriter(
-      graft.streaming.Streaming.eventStream(spark, src), lake, ckpt).start()
-    q2.awaitTermination(60000)
-    assert(spark.read.parquet(lake).count() == 2)
+    // second run over the same checkpoint: no new files → no new snapshot
+    val landed = Snapshots.currentVersion(spark, lake)
+    land()
+    assert(Snapshots.currentVersion(spark, lake) == landed)
+    assert(Snapshots.read(spark, lake).count() == 2)
   }
 
   test("bucketed layout: equi-join on the bucket key plans with ZERO shuffles") {
@@ -253,12 +146,15 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
       """{"event":"a","distinct_id":"d1","timestamp":"2024-03-01T00:00:00Z"}""",
       """{"event":"b","distinct_id":"d1","timestamp":"2024-03-02T00:00:00Z"}""",
       """{"event":"c","distinct_id":"d2"}""")
-    val m = Lake.writeEventsObserved(events, dir)
-    assert(m.getAs[Long]("n_rows") == 3L)
-    assert(m.getAs[Long]("n_missing_did") == 0L)
-    assert(m.getAs[Long]("n_missing_ts") == 1L)
-    assert(m.getAs[Long]("n_approx_users") == 2L) // HLL exact at this cardinality
-    assert(Lake.readEvents(spark, dir).count() == 3)
+    val obs = Observation("landing")
+    Snapshots.commit(spark, dir, Lake.atRest(events.dropDuplicates("uuid"))
+      .observe(obs, Lake.LandingMetrics.head, Lake.LandingMetrics.tail: _*))
+    val m = obs.get
+    assert(m("n_rows") == 3L)
+    assert(m("n_missing_did") == 0L)
+    assert(m("n_missing_ts") == 1L)
+    assert(m("n_approx_users") == 2L) // HLL exact at this cardinality
+    assert(Snapshots.read(spark, dir).count() == 3)
   }
 
   test("streaming epochs carry observed metrics: per-epoch counts delivered at commit") {
@@ -277,16 +173,19 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
       .crossJoin(spark.createDataFrame(spark.sparkContext.parallelize(events.toSeq),
         canonical("""{"event":"x","distinct_id":"d"}""").schema))
       .drop("tick")
-    val seen = scala.collection.concurrent.TrieMap.empty[Long, org.apache.spark.sql.Row]
-    Lake.streamWriterObserved(stream, dir, ckpt,
-      (id, m) => seen.put(id, m)).start().awaitTermination()
+    val q = Snapshots.streamCommitWriter(Lake.atRest(stream)
+      .observe("landing", Lake.LandingMetrics.head, Lake.LandingMetrics.tail: _*), dir, ckpt)
+      .start()
+    q.awaitTermination()
+    val seen = q.recentProgress.flatMap(p =>
+      Option(p.observedMetrics.get("landing")).map(p.batchId -> _)).toMap
     assert(seen.contains(0L), s"no metrics delivered for epoch 0: $seen")
     val m = seen(0L)
     assert(m.getAs[Long]("n_rows") == 3L)
     assert(m.getAs[Long]("n_missing_ts") == 1L)
     assert(m.getAs[Long]("n_approx_users") == 2L)
-    // and the epoch itself landed idempotently, like plain streamWriter
-    assert(Lake.readEvents(spark, dir).count() == 3)
+    // and the epoch itself committed exactly once
+    assert(Snapshots.read(spark, dir).count() == 3)
   }
 
   test("z-order rewrite clusters BOTH dimensions into tight per-file ranges") {
@@ -311,15 +210,5 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     spans.foreach { case (sx, sy) =>
       assert(sx <= 8 && sy <= 8, s"file spans x=$sx y=$sy; z-clustering lost")
     }
-  }
-
-  test("partition filter prunes at scan (PartitionFilters in plan)") {
-    val dir = Files.createTempDirectory("lake").toString
-    Lake.writeEvents(canonical(
-      """{"event":"a","distinct_id":"d1","timestamp":"2024-03-01T00:00:00Z"}""",
-      """{"event":"b","distinct_id":"d2","timestamp":"2024-03-02T00:00:00Z"}"""), dir)
-    val q = Lake.readEvents(spark, dir).filter(col("event_date") === "2024-03-01")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(event_date"), plan)
   }
 }

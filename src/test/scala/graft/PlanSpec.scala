@@ -235,20 +235,6 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     assert(!p.toLowerCase.contains("scalaudf"), "session intake grew a UDF")
   }
 
-  test("lake scans prune partitions on event_date") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("planlake").toString
-    val ev = graft.ingest.Normalizer.ingest(
-      Seq("""{"event":"a","distinct_id":"d","timestamp":"2024-03-01T00:00:00Z"}""",
-        """{"event":"b","distinct_id":"d","timestamp":"2024-03-02T00:00:00Z"}""").toDF("body"),
-      col("body"),
-      graft.ingest.Normalizer.IngestContext(now = to_timestamp(lit("2024-03-05 10:00:00"))))
-    graft.sources.Lake.writeEvents(ev, dir)
-    val p = plan(graft.sources.Lake.readEvents(spark, dir)
-      .filter(col("event_date") === "2024-03-01"))
-    assert(p.contains("PartitionFilters: [isnotnull(event_date"), p.take(1200))
-  }
-
   test("round-8 additions: one lang shuffle for token budget, top-k dict election, no cartesian") {
     val tb = plan(SparkEntry.queries("q_corpus_token_budget")(spark, sf))
     assert(!tb.contains("CartesianProduct"), tb.take(1500))

@@ -31,10 +31,10 @@ class SessionGuardSpec extends AnyFunSuite {
 
   test("registry code loads parquet through Tables.parquet's schema memo") {
     // a bare read infers the schema with a Spark job on every load;
-    // Lake and Snapshots read file sets that change every commit, and
+    // Snapshots reads file sets that change every commit, and
     // IdentityMerge reads its own epoch deltas
     val needle = """\.read\s*\.\s*(parquet|schema)\s*\(""".r
-    val allowed = Set("Tables.scala", "Lake.scala", "Snapshots.scala", "IdentityMerge.scala")
+    val allowed = Set("Tables.scala", "Snapshots.scala", "IdentityMerge.scala")
     val root = Paths.get("src/main")
     assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
     val readers = Files.walk(root).iterator().asScala.toSeq
@@ -43,5 +43,19 @@ class SessionGuardSpec extends AnyFunSuite {
       .map(_.getFileName.toString).toSet
     assert(readers.contains("Tables.scala"), s"the scanner found no reads: $readers")
     assert((readers -- allowed).isEmpty, s"bare parquet reads outside Tables: ${readers -- allowed}")
+  }
+
+  test("no listener registration or sleep poll in src/main") {
+    // observed metrics come from Spark's Observation / streaming
+    // progress, which deliver synchronously; a session-wide listener
+    // plus a sleep poll is a race with a timeout
+    val needle = """QueryExecutionListener|Thread\.sleep""".r
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
+    val hits = Files.walk(root).iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => needle.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.getFileName.toString)
+    assert(hits.isEmpty, s"listener or sleep poll in src/main: $hits")
   }
 }

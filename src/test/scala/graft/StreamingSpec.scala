@@ -1079,7 +1079,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // mixed payload kinds, engineered so merges land LATER than the
     // records they absorb (cross-batch resolve), an engage unset flips
     // a flag decision mid-stream, and one in-phase duplicate body
-    // exercises the epoch uuid dedup on the lake path
+    // exercises the stream uuid dedup on the lake path
     val phase1 = Seq(
       """{"event":"pv","distinct_id":"anon-1","properties":{"$set":{"plan":"free"}},"eid":1}""",
       """{"event":"pv","distinct_id":"anon-2","properties":{"$set":{"plan":"pro"}},"eid":2}""",
@@ -1124,7 +1124,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     val (lakePath, stateDir) = (s"$dir/lake", s"$dir/state")
     val metrics = scala.collection.mutable.ArrayBuffer.empty[(Long, org.apache.spark.sql.Row)]
 
-    // sink 1: canonical events land in the lake, per-epoch observed
+    // sink 1: canonical events land in the snapshot lake, deduped on
+    // uuid under a created_at watermark, with per-epoch observed
     // metrics, one AvailableNow run per phase over a shared checkpoint
     val memLake = MemoryStream[String]
     // sink 2: person ops fold into the identity-merge state, delta
@@ -1141,10 +1142,15 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     val liveDecisions = try {
       phases.zipWithIndex.foreach { case (bodies, epoch) =>
         memLake.addData(bodies: _*)
-        val q = graft.sources.Lake.streamWriterObserved(
-          canonical(memLake.toDF()), lakePath, s"$dir/ckpt_lake",
-          (id, row) => metrics.synchronized { metrics += ((id, row)) }).start()
+        val landing = graft.sources.Lake.atRest(Streaming.dedupStream(
+            canonical(memLake.toDF()), key = "uuid", tsCol = "created_at"))
+          .observe("landing", graft.sources.Lake.LandingMetrics.head,
+            graft.sources.Lake.LandingMetrics.tail: _*)
+        val q = graft.sources.Snapshots.streamCommitWriter(
+          landing, lakePath, s"$dir/ckpt_lake").start()
         q.awaitTermination()
+        q.recentProgress.foreach(p => Option(p.observedMetrics.get("landing"))
+          .foreach(row => metrics += ((p.batchId, row))))
         memState.addData(bodies: _*); stQ.processAllAvailable()
         st.saveDelta(stateDir)
         // serving maintenance: upsert the live records, then delete the
@@ -1221,7 +1227,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       "cohort insight over the stream-maintained dimension diverged from the batch dimension")
     // 4. the lake landed every canonical event exactly once (the
     // in-phase duplicate collapsed), with per-epoch observed metrics
-    val lake = graft.sources.Lake.readEvents(spark, lakePath)
+    val lake = graft.sources.Snapshots.read(spark, lakePath)
     // the composition's lake landed VARIANT-at-rest (the default layout
     // since r16) and the layout-agnostic probe reads it
     assert(lake.schema("properties").dataType
@@ -1232,10 +1238,14 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(lakeUuids == batchCanon.select("uuid").collect().map(_.getString(0)).sorted.toSeq,
       "lake rows != deduped batch canonical events")
     assert(lakeUuids.distinct.size == lakeUuids.size, "duplicate uuid landed in the lake")
-    assert(metrics.map(_._1).distinct.size == 3, s"expected 3 observed epochs: $metrics")
-    val observedRows = metrics.map { case (_, r) => r.getLong(r.fieldIndex("n_rows")) }.sum
-    // the observation rides the sink pass AFTER the epoch uuid dedup,
-    // so summed epoch counts equal the landed rows exactly
+    val observed = metrics.map { case (id, r) => id -> r.getLong(r.fieldIndex("n_rows")) }
+    assert(observed.map(_._1).distinct.size == observed.size, s"an epoch observed twice: $metrics")
+    // the created_at watermark advances after the first epoch, so Spark
+    // runs a no-data epoch to evict dedup state: it is observed at 0 rows
+    assert(observed.count(_._2 > 0) == 3, s"expected 3 observed data epochs: $metrics")
+    val observedRows = observed.map(_._2).sum
+    // the observation rides the sink pass AFTER the stream's uuid
+    // dedup, so summed epoch counts equal the landed rows exactly
     assert(observedRows == lakeUuids.size,
       s"observed epoch rows $observedRows != landed rows ${lakeUuids.size}")
   }
