@@ -4,7 +4,11 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.reflect.ClassTag
 
 /** The driver-heap contract: one budget, one bounded collect, one
@@ -110,32 +114,96 @@ object HeapWatermark {
 
   /** [[collectWithin]] for a DataFrame whose collect must fit: the
     * rows' measured [[sizeOf]] decides, and an over-budget result fails
-    * here instead of pressuring the heap. The tasks ship the compact
-    * internal rows; the driver converts them as `collect()` does.
+    * here instead of pressuring the heap. The tasks size and ship the
+    * compact internal rows ([[rowBytes]]); the driver converts them as
+    * `collect()` does.
     */
   def collectMetered(site: String, df: DataFrame, budget: Long = Budget): Array[Row] = {
     val rows = collectWithin(site, df.queryExecution.toRdd.map(_.copy()),
-      new RowBytes(df.schema), budget)
+      rowBytes(df.schema), budget)
     require(rows.isDefined,
       s"$site: driver collect exceeds its budget (measured rows against " +
         s"${budget >> 20} MiB) — this materialization must become distributed " +
         "at this scale")
-    val toRow = RowBytes.deserializer(df.schema)
+    val toRow = deserializer(df.schema)
     rows.get.map(toRow)
   }
 
-  /** [[sizeOf]] of an internal row as the external [[Row]] the driver
-    * will hold; one deserializer per task.
+  /** The internal row → external [[Row]] conversion `collect()` applies. */
+  private[graft] def deserializer(schema: StructType): InternalRow => Row =
+    ExpressionEncoder(schema).resolveAndBind().createDeserializer()
+
+  /** [[sizeOf]] of the external [[Row]] an internal row of `schema`
+    * becomes under [[deserializer]], read off the internal row by
+    * schema, with no conversion: strings count their UTF-16 length
+    * from the UTF-8 bytes, and a timestamp counts as the
+    * `java.sql.Timestamp` or `Instant` the session's java8 API setting
+    * makes of it.
     */
-  private final class RowBytes(schema: StructType) extends (InternalRow => Long)
-      with Serializable {
-    @transient private lazy val toRow = RowBytes.deserializer(schema)
-    def apply(r: InternalRow): Long = sizeOf(toRow(r))
+  private[graft] def rowBytes(schema: StructType): InternalRow => Long = {
+    val tsBytes = if (SQLConf.get.datetimeJava8ApiEnabled) 8L else 12L
+    val fields = schema.fields.map(f => valueBytes(f.dataType, tsBytes))
+    (r: InternalRow) => structBytes(fields, r)
   }
 
-  private object RowBytes {
-    def deserializer(schema: StructType): InternalRow => Row =
-      ExpressionEncoder(schema).resolveAndBind().createDeserializer()
+  /** Bytes of a non-null value at an ordinal of a row or array. */
+  private type ValueBytes = (SpecializedGetters, Int) => Long
+
+  private def structBytes(fields: Array[ValueBytes], r: InternalRow): Long = {
+    var n = 16L
+    var i = 0
+    while (i < fields.length) {
+      n += (if (r.isNullAt(i)) 4L else fields(i)(r, i))
+      i += 1
+    }
+    n
+  }
+
+  private def elementBytes(a: ArrayData, e: ValueBytes): Long = {
+    var n = 0L
+    var i = 0
+    while (i < a.numElements()) {
+      n += (if (a.isNullAt(i)) 4L else e(a, i))
+      i += 1
+    }
+    n
+  }
+
+  private def valueBytes(dt: DataType, tsBytes: Long): ValueBytes = dt match {
+    case _: StringType | _: CharType | _: VarcharType =>
+      (g, i) => 40L + 2L * utf16Length(g.getUTF8String(i))
+    case BinaryType => (g, i) => 16L + g.getBinary(i).length
+    case IntegerType | FloatType => (_, _) => 4L
+    case BooleanType | ByteType => (_, _) => 1L
+    case TimestampType => (_, _) => tsBytes
+    case ArrayType(et, _) =>
+      val e = valueBytes(et, tsBytes)
+      (g, i) => 16L + elementBytes(g.getArray(i), e)
+    case MapType(kt, vt, _) =>
+      val (k, v) = (valueBytes(kt, tsBytes), valueBytes(vt, tsBytes))
+      (g, i) => {
+        val m = g.getMap(i)
+        16L + elementBytes(m.keyArray(), k) + elementBytes(m.valueArray(), v)
+      }
+    case st: StructType =>
+      val fields = st.fields.map(f => valueBytes(f.dataType, tsBytes))
+      (g, i) => structBytes(fields, g.getStruct(i, fields.length))
+    case udt: UserDefinedType[_] => (g, i) => sizeOf(udt.deserialize(g.get(i, udt.sqlType)))
+    case _ => (_, _) => 8L // long, double, short, date, decimal, interval, variant
+  }
+
+  /** UTF-16 length of valid UTF-8: one unit per code point, two for
+    * the 4-byte (supplementary-plane) ones.
+    */
+  private def utf16Length(s: UTF8String): Int = {
+    var units = 0
+    var i = 0
+    while (i < s.numBytes()) {
+      val w = UTF8String.numBytesForFirstByte(s.getByte(i))
+      units += (if (w == 4) 2 else 1)
+      i += w
+    }
+    units
   }
 
   def reset(): Unit = peaks.clear()

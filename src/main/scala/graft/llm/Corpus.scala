@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 /** The end-to-end corpus-curation funnel — the composition every
   * training-data pipeline runs before tokenization:
   *
-  *   quality gate ([[TextOps.textStats]] heuristics) ×
+  *   quality gate ([[TextOps.isQuality]], the [[TextOps.textStats]] flag) ×
   *   language gate ×
   *   near-dup dedup decision ([[Dedup.clusters]]: MinHash-LSH pairs →
   *   CC → keep the cluster's min doc_id)
@@ -17,17 +17,20 @@ import org.apache.spark.sql.functions._
   * emitted as one decision row per document with each gate's verdict
   * and the final selection — auditable (why was a doc dropped?) and
   * replayable. At 100 TB each gate is the operator documented at its
-  * own query; the funnel adds two broadcast-joinable decision columns,
-  * no new shuffle over document payloads.
+  * own query; the funnel computes its decision columns in the scan
+  * that labels the clusters, no new shuffle over document payloads.
   */
 object Corpus {
 
+  /** One decision row per document. `lang` and `is_quality` ride the
+    * scan that labels the clusters ([[Dedup.clustersWith]]), so
+    * `documents` is read once and joined to nothing but the component
+    * map; that relies on `doc_id` being the `documents` key.
+    */
   def funnel(s: SparkSession, d: String): DataFrame = {
-    val quality = TextOps.textStats(s, d).select(col("doc_id"), col("is_quality"))
-    val keepers = Dedup.clusters(s, d).select(col("doc_id"), col("is_keeper"), col("cluster_id"))
-    Tables.documents(s, d).select(col("doc_id"), col("lang"))
-      .join(quality, Seq("doc_id"))
-      .join(keepers, Seq("doc_id"))
+    val toks = Portable.tokens(col("text"))
+    Dedup.clustersWith(s, d, col("lang"),
+        TextOps.isQuality(size(toks), size(array_distinct(toks))).as("is_quality"))
       .select(col("doc_id"), col("cluster_id"),
         col("is_quality"),
         col("lang").isin("en", "de").as("is_lang_ok"),
@@ -326,9 +329,7 @@ object Corpus {
       .select(col("doc_id"), col("lang"), h60(col("text")).as("h"),
         size(toks).cast("long").as("n_tokens"),
         size(array_distinct(toks)).cast("long").as("n_uniq"))
-      .withColumn("is_quality",
-        col("n_tokens") >= 10 && col("n_tokens") <= 1000 &&
-          col("n_uniq") * 2 >= col("n_tokens"))
+      .withColumn("is_quality", TextOps.isQuality(col("n_tokens"), col("n_uniq")))
     val order = Seq(col("is_quality").desc, col("h"), col("doc_id"))
     val wRun = Window.partitionBy(col("lang")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -464,9 +465,7 @@ object Corpus {
         h60(concat(lit(EpochSeed + "st:"), col("doc_id").cast("string"))).as("shuf_key"),
         size(toks).cast("long").as("n_tokens"),
         size(array_distinct(toks)).cast("long").as("n_uniq"))
-      .withColumn("is_quality",
-        col("n_tokens") >= 10 && col("n_tokens") <= 1000 &&
-          col("n_uniq") * 2 >= col("n_tokens"))
+      .withColumn("is_quality", TextOps.isQuality(col("n_tokens"), col("n_uniq")))
     val w = Window.partitionBy(col("lang"), col("is_quality"))
       .orderBy(col("shuf_key"), col("doc_id"))
     base

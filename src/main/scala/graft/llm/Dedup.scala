@@ -2,7 +2,7 @@ package graft.llm
 
 import graft.Tables
 import graft.queries.Q
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import Portable._
@@ -327,11 +327,11 @@ object Dedup {
        |WHERE jaccard >= 0.8""".stripMargin
   }
 
-  /** Fat-bucket cap for the PAIR-FORMING band-join consumers
-    * ([[minhashPairs]] → clusters/keep-best, [[editPairs]], and since
-    * r17 [[incremental]] — both the standing prior-snapshot index and
-    * the new-slice bands, closing the re-crawl-path candidate wall the
-    * r16 ADVICE flagged). A band
+  /** Fat-bucket cap for the PAIR-FORMING band consumers
+    * ([[minhashPairs]] → clusters/keep-best, [[editPairs]], both through
+    * [[bandPairs]], and since r17 [[incremental]] through [[capBuckets]]
+    * — both the standing prior-snapshot index and the new-slice bands,
+    * closing the re-crawl-path candidate wall the r16 ADVICE flagged). A band
     * hash shared by more than [[FatBucketCap]] documents is a band
     * COLLISION cluster, not near-dup evidence — its membership grows
     * linearly with the corpus, so its pair product grows quadratically
@@ -357,6 +357,9 @@ object Dedup {
 
   /** Drop (band, band_hash) buckets larger than [[FatBucketCap]] —
     * one compact-key aggregate + equi-join, linear in the band table.
+    * Only [[incremental]] uses it: there the capped new slice probes a
+    * standing prior index, a join between two band tables that
+    * [[bandPairs]]' one-table aggregate cannot form.
     */
   private[graft] def capBuckets(bands: DataFrame): DataFrame =
     bands.join(
@@ -365,41 +368,56 @@ object Dedup {
         .select(col("band"), col("band_hash")),
       Seq("band", "band_hash"))
 
+  /** Band table `(doc_id, band, band_hash)` → candidate pairs
+    * `(doc_a, doc_b, n_bands)`, `doc_a < doc_b`, `n_bands` = the bands
+    * the two documents share: the [[capBuckets]] + band self-join
+    * result, in ONE aggregate over `(band, band_hash)`. The group takes
+    * its `count` and its smallest [[FatBucketCap]] + 1 members through
+    * the bounded [[graft.functions.TopKAggregator]] (per-group state is
+    * at most that many ids, never the bucket); buckets of 2 to
+    * [[FatBucketCap]] members explode their pairs, and a fat bucket
+    * (count past the cap) contributes none. A null `band_hash` (a
+    * document with no shingles) is no bucket: it never pairs, as the
+    * equi-join's null semantics had it. Each document sits in a
+    * bucket once per band, so the members are distinct ids.
+    */
+  private[graft] def bandPairs(bands: DataFrame): DataFrame = {
+    val members = udaf(new graft.functions.TopKAggregator(FatBucketCap + 1, Ordering.Long))
+    bands.filter(col("band_hash").isNotNull)
+      .groupBy(col("band"), col("band_hash"))
+      .agg(count(lit(1)).as("n"), members(col("doc_id"), col("doc_id")).as("m"))
+      .filter(col("n") >= 2 && col("n") <= FatBucketCap)
+      // members come back ascending, so every later member is a larger id
+      .select(col("m._2").as("ids"))
+      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "doc_a")))
+      .select(col("doc_a"),
+        explode(slice(col("ids"), col("i") + 2, size(col("ids")))).as("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("n_bands"))
+  }
+
   /** DuckDB rendering of [[capBuckets]] given a bands CTE name. */
   private def capBucketsSql(b: String): String =
     s"""SELECT $b.* FROM $b JOIN (
        |  SELECT band, band_hash FROM $b GROUP BY 1, 2
        |  HAVING count(*) <= $FatBucketCap) __g USING (band, band_hash)""".stripMargin
 
-  /** Q-DEDUP-4: full MinHash-LSH dedup — candidates from the band-hash
-    * equi-join over [[capBuckets]]-filtered buckets, then **verified**
-    * with exact Jaccard (so LSH recall gaps can't produce false
-    * positives). Output = confirmed near-dup pairs with their band
-    * support. The all-pairs product never forms: at 100 TB the band
-    * join shuffles (doc_id, int64) pairs only, and the fat-bucket cap
-    * keeps the candidate count linear in the corpus.
+  /** Q-DEDUP-4: full MinHash-LSH dedup — candidates from
+    * [[bandPairs]] (one aggregate over the band table's
+    * `(band, band_hash)` buckets, fat buckets past [[FatBucketCap]]
+    * dropped), then **verified** with exact Jaccard (so LSH recall gaps
+    * can't produce false positives). Output = confirmed near-dup pairs
+    * with their band support. The all-pairs product never forms: at
+    * 100 TB the band aggregate shuffles (doc_id, int64) rows once, and
+    * the cap keeps the candidate count linear in the corpus.
     */
   def minhashPairs(s: SparkSession, d: String): DataFrame = {
     // ONE shingle pass: the persisted shingle table feeds both the
     // exact-Jaccard verify AND the band derivation ([[bandsFromShingles]]);
-    // bands cached too because both sides of the band self-join (and a
-    // possible broadcast build) read it
+    // the band table itself is read once, by bandPairs' aggregate
     val docs = shingleDocs(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persist the RAW bands, then cap: capBuckets reads its input twice
-    // (bucket-size aggregate + the equi-join back), and the signature
-    // derivation (an md5 and 32 permutations per shingle) must not run
-    // once per side
-    val bands0 = bandsFromShingles(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = capBuckets(bands0)
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_bands"))
-    cand
+    bandPairs(bandsFromShingles(docs))
       .join(docs.as("da"), col("doc_a") === col("da.doc_id"))
       .join(docs.as("db"), col("doc_b") === col("db.doc_id"))
       .select(col("doc_a"), col("doc_b"), col("n_bands"),
@@ -697,20 +715,30 @@ object Dedup {
     * orders of magnitude smaller than the corpus; unpaired documents
     * never enter the fixpoint (left join back).
     */
-  def clusters(s: SparkSession, d: String): DataFrame = {
-    // zero-padded ids so the CC label election (lexical min) is numeric min
+  def clusters(s: SparkSession, d: String): DataFrame = clustersWith(s, d)
+
+  /** [[clusters]] plus `carry`: columns computed over `documents` in the
+    * same scan that labels the clusters, after `is_keeper`. This is how
+    * [[keepBest]] (`n_chars`) and [[Corpus.funnel]] (`lang`,
+    * `is_quality`) read `documents` once instead of joining it back.
+    * One row per `documents` row: it relies on `doc_id` being the
+    * `documents` key, as the old join-back did.
+    */
+  private[graft] def clustersWith(s: SparkSession, d: String, carry: Column*): DataFrame = {
+    // zero-padded ids so the CC label election (lexical min) is numeric min.
+    // The pairs are grouped by (doc_a, doc_b): the edge SET components asks for
     val pairs = minhashPairs(s, d).select(
       format_string("%010d", col("doc_a")).as("src"),
       format_string("%010d", col("doc_b")).as("dst"))
     val comp = graft.state.IdentityResolver.components(s, pairs)
+    val docs = Tables.documents(s, d).select(col("doc_id") +: carry: _*)
+    val clusterId = coalesce(col("canonical").cast(LongType), col("doc_id"))
     // no broadcast hint: the component table is one row per PAIRED doc,
     // which grows with the corpus (near-dup rate × N) — AQE broadcasts
     // it while it is small and falls back to a shuffle join at scale
-    Tables.documents(s, d).select(col("doc_id"))
-      .join(comp, format_string("%010d", col("doc_id")) === col("id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("canonical").cast(LongType), col("doc_id")).as("cluster_id"))
-      .withColumn("is_keeper", col("doc_id") === col("cluster_id"))
+    docs.join(comp, format_string("%010d", col("doc_id")) === col("id"), "left")
+      .select(Seq(col("doc_id"), clusterId.as("cluster_id"),
+        (col("doc_id") === clusterId).as("is_keeper")) ++ docs.columns.tail.map(col): _*)
   }
 
   val clustersSql: String =
@@ -739,16 +767,16 @@ object Dedup {
     * (cluster_id, n_chars, doc_id) triples — document payloads never
     * enter the shuffle; cluster state is one row per *clustered*
     * document (singletons keep themselves via the same window on a
-    * 1-row partition). The rewrite table is the broadcast side of the
-    * final keep-join against the corpus.
+    * 1-row partition). `n_chars` rides the labeling scan
+    * ([[clustersWith]]), so `documents` is read once. The rewrite table
+    * is the broadcast side of the final keep-join against the corpus.
     */
   def keepBest(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("cluster_id"))
       .orderBy(col("n_chars").desc, col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    clusters(s, d).select(col("doc_id"), col("cluster_id"))
-      .join(Tables.documents(s, d).select(col("doc_id"), col("n_chars")), Seq("doc_id"))
+    clustersWith(s, d, col("n_chars"))
       .withColumn("keeper_id", first(col("doc_id")).over(w))
       .select(col("doc_id"), col("cluster_id"), col("n_chars"), col("keeper_id"),
         (col("doc_id") === col("keeper_id")).as("is_keeper"))
@@ -993,8 +1021,9 @@ object Dedup {
     * bit-equal across engines.
     *
     * Shape at 100 TB: identical to [[minhashPairs]] — the all-pairs
-    * product never forms; the band equi-join shuffles (doc_id, int64)
-    * keys, document text joins in only for the verified candidate set,
+    * product never forms; candidates come from [[bandPairs]]' one
+    * aggregate over the (doc_id, int64) band rows, keeping only the
+    * pair key, document text joins in only for the candidate set,
     * and the verify is map-side with the banded kernel. Recall is the
     * LSH trade ([[lshAudit]] measures it); the oracle recomputes the
     * identical deterministic bands, so the scale path itself is
@@ -1009,17 +1038,8 @@ object Dedup {
     * multi-byte corpus changes only the ORACLE, not this plan.
     */
   def editPairs(s: SparkSession, d: String): DataFrame = {
-    // same persist-then-cap order as minhashPairs: the raw band table
-    // materializes once, the cap's two reads hit the cache
-    val bands0 = minhashBands(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = capBuckets(bands0)
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    // bandPairs' pairs are grouped, so already distinct
+    val cand = bandPairs(minhashBands(s, d)).select(col("doc_a"), col("doc_b"))
     val docs = Tables.par(Tables.documents(s, d))
       .select(col("doc_id"), col("text"), length(col("text")).cast(LongType).as("len"))
     cand

@@ -29,6 +29,14 @@ object TextOps {
   private def hitsSql(toks: String, ws: Seq[String]) =
     s"len(list_filter($toks, t -> list_contains([${ws.map("'" + _ + "'").mkString(",")}], t)))"
 
+  /** The quality gate: 10 ≤ n_tokens ≤ 1000 and at least half the
+    * tokens distinct. [[textStats]], [[Corpus.funnel]],
+    * [[Corpus.tokenBudget]] and [[Corpus.stratShards]] all decide
+    * `is_quality` through it; their oracle SQL spells the same predicate.
+    */
+  def isQuality(nTokens: Column, nUniq: Column): Column =
+    nTokens >= 10 && nTokens <= 1000 && nUniq * 2 >= nTokens
+
   /** Q-TEXT-1: token counts + quality-score features per document.
     * Ratios are a single integer/integer double division ⇒ bit-exact
     * across engines.
@@ -49,8 +57,7 @@ object TextOps {
         (col("n_token_chars").cast(DoubleType) / col("n_tokens")).as("avg_token_len"),
         (col("n_stopwords").cast(DoubleType) / col("n_tokens")).as("stopword_ratio"),
         (col("n_uniq_tokens").cast(DoubleType) / col("n_tokens")).as("uniq_ratio"),
-        (col("n_tokens") >= 10 && col("n_tokens") <= 1000 &&
-          col("n_uniq_tokens") * 2 >= col("n_tokens") * 1).as("is_quality"))
+        isQuality(col("n_tokens"), col("n_uniq_tokens")).as("is_quality"))
   }
 
   val textStatsSql: String = {

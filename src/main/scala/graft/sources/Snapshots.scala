@@ -210,12 +210,28 @@ object Snapshots {
     * BEFORE the claim — on a lost race the files are orphans (never
     * referenced; [[expire]]'s orphan sweep or a retry reuses nothing),
     * exactly Iceberg's failed-commit story.
+    *
+    * A new file whose footer counts 0 rows is deleted, not committed
+    * (a stream's no-data epoch writes one), unless the snapshot would
+    * otherwise list no file at all: one file then stays to carry the
+    * schema. An empty append to a table with files therefore publishes
+    * a metadata-only manifest — the parent's file list, and the
+    * properties (the epoch high-water) advanced.
     */
   def commit(spark: SparkSession, dir: String, df: DataFrame,
       operation: String = "append", replace: Boolean = false,
       setProps: Map[String, String] = Map.empty): Snapshot = {
-    val (_, newFiles) = writeDataFiles(spark, dir, df)
-    commitFiles(spark, dir, newFiles, operation, replace, setProps)
+    val (id, written) = writeDataFiles(spark, dir, df)
+    val info = written.map(rel => rel -> footerInfo(spark, dir, rel)).toMap
+    val (empty, withRows) = written.partition(info(_)._1 == 0L)
+    val keepOne = withRows.isEmpty && (replace || !currentVersion(spark, dir).exists(v =>
+      readManifest(spark, dir, v).files.nonEmpty))
+    val dropped = if (keepOne) empty.drop(1) else empty
+    val f = fs(spark, dir)
+    if (dropped.nonEmpty && dropped.size == written.size) f.delete(new HPath(dir, s"data/$id"), true)
+    else dropped.foreach(rel => f.delete(new HPath(dir, rel), false))
+    commitFiles(spark, dir, written.filterNot(dropped.toSet), operation, replace,
+      setProps, info)
   }
 
   /** Publish a manifest referencing `newFiles` (+ the parent's files
@@ -225,7 +241,8 @@ object Snapshots {
     */
   private[sources] def commitFiles(spark: SparkSession, dir: String,
       newFiles: Seq[String], operation: String, replace: Boolean,
-      setProps: Map[String, String] = Map.empty): Snapshot = {
+      setProps: Map[String, String] = Map.empty,
+      footers: Map[String, (Long, Map[String, (Long, Long)])] = Map.empty): Snapshot = {
     val f = fs(spark, dir)
     f.mkdirs(new HPath(dir, "metadata"))
     val parent = currentVersion(spark, dir)
@@ -259,13 +276,13 @@ object Snapshots {
         if (replace) Seq.empty else parentSnap.map(_.files).getOrElse(Seq.empty)
       val files = base ++ newFiles
       // footers are read only for files with no inherited manifest
-      // entry (O(commit), not O(table)): carried files keep the stats
-      // the commit that created them cached
+      // entry (O(commit), not O(table)) and not already read by the
+      // caller: carried files keep the stats the commit that created
+      // them cached
       val parentStats = parentSnap.map(_.stats).getOrElse(Map.empty)
-      val freshInfo: Map[String, (Long, Long, Map[String, (Long, Long)])] =
+      val freshInfo: Map[String, (Long, Map[String, (Long, Long)])] =
         newFiles.filterNot(parentStats.contains).map { rel =>
-          val (r, st) = footerInfo(spark, dir, rel)
-          rel -> (r, r, st)
+          rel -> footers.getOrElse(rel, footerInfo(spark, dir, rel))
         }.toMap
       def rowsOf(rel: String): Long =
         freshInfo.get(rel).map(_._1).getOrElse(footerRows(spark, dir, rel))
@@ -274,7 +291,7 @@ object Snapshots {
         if (replace) newRows else parentSnap.map(_.rowCount).getOrElse(0L) + newRows
       val stats: Map[String, Map[String, (Long, Long)]] =
         files.flatMap { rel =>
-          freshInfo.get(rel).map(i => rel -> i._3)
+          freshInfo.get(rel).map(i => rel -> i._2)
             .orElse(parentStats.get(rel).map(rel -> _))
         }.toMap
       // properties inherit through every commit so durable table state

@@ -84,7 +84,11 @@ object IdentityResolver {
     */
   val IdentityLabel: org.apache.spark.sql.Column => org.apache.spark.sql.Column = identity
 
-  /** edges: DataFrame with string columns (`src`, `dst`).
+  /** edges: DataFrame with string columns (`src`, `dst`) that is a SET
+    * — no `(src, dst)` row twice. The local path collects it as given,
+    * so a repeated edge would count twice against `localHeapBudget`;
+    * callers whose edges can repeat run `distinct()` themselves (the
+    * distributed path still dedups its symmetric closure).
     * labelRank: maps an id to a sortable label prefix rank (lower wins
     * canonical election). Returns (`id`, `canonical`).
     */
@@ -97,7 +101,7 @@ object IdentityResolver {
 
     import spark.implicits._
 
-    val undirected = edges.select(col("src"), col("dst")).distinct()
+    val undirected = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // driver-local union-find; labelOf still evaluated by Spark so

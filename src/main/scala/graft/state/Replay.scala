@@ -284,8 +284,9 @@ object Replay {
     // ingest→extraction chain) computes once. The op rows are compact
     // (ids + small maps), a tiny fraction of the event bytes.
     val cached = ops.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // an alias can repeat across ops; components takes an edge set
     val edges = cached.filter(_.alias_to.isDefined)
-      .map(o => (o.raw_id, o.alias_to.get)).toDF("src", "dst")
+      .map(o => (o.raw_id, o.alias_to.get)).toDF("src", "dst").distinct()
     val redirects = IdentityResolver.components(spark, edges, labelOf)
     cached.toDF()
       .join(broadcast(redirects), col("raw_id") === col("id"), "left")

@@ -90,4 +90,46 @@ class HeapWatermarkSpec extends AnyFunSuite with SparkSuite {
     assert(sizes.size == 4)
     assert(sizes.max < rowBytes / 20, s"task result sizes $sizes against $rowBytes B of rows")
   }
+  test("collectMetered sizes internal rows by schema exactly as sizeOf sizes the collected Row") {
+    import org.apache.spark.sql.types._
+    val inner = StructType(Seq(StructField("k", StringType), StructField("ts", TimestampType),
+      StructField("xs", ArrayType(IntegerType))))
+    val schema = StructType(Seq(
+      StructField("s", StringType), StructField("bin", BinaryType),
+      StructField("i", IntegerType), StructField("l", LongType), StructField("sh", ShortType),
+      StructField("b", BooleanType), StructField("f", FloatType), StructField("d", DoubleType),
+      StructField("ts", TimestampType), StructField("dt", DateType),
+      StructField("dec", DecimalType(20, 4)),
+      StructField("arr", ArrayType(StringType)), StructField("bins", ArrayType(BinaryType)),
+      StructField("m", MapType(StringType, ArrayType(LongType))),
+      StructField("st", inner), StructField("sts", ArrayType(inner))))
+    val ts = java.sql.Timestamp.valueOf("2024-02-29 12:34:56.789")
+    // supplementary-plane characters: 4 UTF-8 bytes, 2 UTF-16 units
+    val grin = new String(Character.toChars(0x1F600))
+    val clef = new String(Character.toChars(0x1D11E))
+    val full = org.apache.spark.sql.Row(
+      s"ascii, é, 中文 and $grin", Array[Byte](1, 2, 3), 7, 8L, 9.toShort, true, 1.5f, 2.5,
+      ts, java.sql.Date.valueOf("2024-03-01"), new java.math.BigDecimal("12345.6789"),
+      Seq("a", null, s"$clef clef"), Seq(Array[Byte](4), null),
+      Map("k1" -> Seq(1L, 2L), "k2" -> null, grin -> Seq.empty[Long]),
+      org.apache.spark.sql.Row("x", ts, Seq(1, null, 3)),
+      Seq(org.apache.spark.sql.Row(null, null, null), null))
+    val nulls = org.apache.spark.sql.Row.fromSeq(Seq.fill(schema.length)(null))
+    val empties = org.apache.spark.sql.Row("", Array.emptyByteArray, 0, 0L, 0.toShort, false,
+      0f, 0.0, ts, java.sql.Date.valueOf("1970-01-01"), java.math.BigDecimal.ZERO,
+      Seq.empty, Seq.empty, Map.empty, org.apache.spark.sql.Row("", null, Seq.empty), Seq.empty)
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(full, nulls, empties), 2), schema)
+    val internal = df.queryExecution.toRdd.map(_.copy()).collect()
+    val toRow = HeapWatermark.deserializer(schema)
+    val model = HeapWatermark.rowBytes(schema)
+    assert(internal.length == 3)
+    internal.foreach(r => assert(model(r) == HeapWatermark.sizeOf(toRow(r)), s"row ${toRow(r)}"))
+    // the non-BMP characters count two UTF-16 units each, as String.length does
+    assert(toRow(internal.head).getString(0).length == 19)
+    // and the metered collect records the same sum the Rows measure
+    val metered = site("internal")
+    val rows = HeapWatermark.collectMetered(metered, df)
+    assert(HeapWatermark.snapshot(metered) == rows.map(HeapWatermark.sizeOf).sum)
+  }
 }

@@ -571,7 +571,10 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     * through `minhashPairs` too, but while their plan is built:
     * `IdentityResolver.components` collects the pair edges into a local
     * union-find, so their plans read a local relation and the
-    * `q_dedup_minhash_pairs` entry covers their banding.
+    * `q_dedup_minhash_pairs` entry covers their banding. The pair-forming
+    * entries (`q_dedup_minhash_pairs`, `q_dedup_edit`) form their
+    * candidates in `Dedup.bandPairs`' one aggregate; the gate after the
+    * registry walk holds them to it.
     */
   private val bandingQueries: Set[String] = Set(
     "q_dedup_minhash", "q_dedup_minhash_pairs", "q_dedup_incremental", "q_dedup_edit",
@@ -672,5 +675,35 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     assert(banding == bandingQueries,
       s"banding queries without minhash_bands: ${bandingQueries -- banding}; " +
         s"unlisted queries with it: ${banding -- bandingQueries}")
+  }
+  test("MinHash pairs form in one (band, band_hash) aggregate; the cluster chain scans documents once") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    // every node of the plan, its subqueries and the persisted frames it reads
+    def nodes(p: LogicalPlan): Seq[LogicalPlan] = p.collectWithSubqueries {
+      case r: InMemoryRelation => r +: nodes(r.cacheBuilder.logicalPlan)
+      case n => Seq(n)
+    }.flatten
+    val bandKey = Set("band", "band_hash")
+    def optimized(q: String) = SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
+    for (q <- Seq("q_dedup_minhash_pairs", "q_dedup_edit")) {
+      val ns = nodes(optimized(q))
+      val bandJoins = ns.collect {
+        case j: Join if j.condition.exists(_.references.exists(a => bandKey(a.name))) => j
+      }
+      assert(bandJoins.isEmpty, s"$q joins on the band key:\n${bandJoins.mkString("\n")}")
+      val bandAggs = ns.collect {
+        case a: Aggregate if a.groupingExpressions.flatMap(_.references.map(_.name)).toSet == bandKey => a
+      }
+      assert(bandAggs.size == 1, s"$q has ${bandAggs.size} (band, band_hash) aggregates, want 1")
+    }
+    for (q <- Seq("q_dedup_keep_best", "q_corpus_funnel")) {
+      val scans = nodes(optimized(q)).collect {
+        case LogicalRelation(h: HadoopFsRelation, _, _, _, _)
+            if h.location.rootPaths.exists(_.getName == "documents.parquet") => h
+      }
+      assert(scans.size == 1, s"$q scans documents ${scans.size} times, want 1")
+    }
   }
 }

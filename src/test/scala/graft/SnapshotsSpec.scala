@@ -135,6 +135,33 @@ class SnapshotsSpec extends AnyFunSuite with SparkSuite {
     assert(Snapshots.snapshots(spark, dir).size == nSnaps + 1)
   }
 
+  test("an empty epoch commits no data file, advances the high-water, and replays as a no-op") {
+    val dir = Files.createTempDirectory("snap").toString
+    Snapshots.commitEpoch(range(0, 10).repartition(2), dir, batchId = 0)
+    val before = Snapshots.snapshots(spark, dir).last
+    // a no-data epoch: its write leaves a 0-row file that the commit drops
+    Snapshots.commitEpoch(range(0, 0), dir, batchId = 1)
+    val empty = Snapshots.snapshots(spark, dir).last
+    assert(empty.operation == "append[epoch=1]")
+    assert(empty.files == before.files, "the empty epoch added a data file")
+    assert(empty.rowCount == 10L && empty.properties("epoch.high-water") == "1")
+    // its data directory is gone too: only the first epoch's commit dir is left
+    assert(new java.io.File(s"$dir/data").listFiles().length == 1)
+    // replaying the empty epoch (or a full one under its id) commits nothing
+    val nSnaps = Snapshots.snapshots(spark, dir).size
+    Snapshots.commitEpoch(range(90, 95), dir, batchId = 1)
+    assert(Snapshots.snapshots(spark, dir).size == nSnaps)
+    assert(Snapshots.read(spark, dir).count() == 10)
+    // the next epoch with rows still commits
+    Snapshots.commitEpoch(range(10, 15), dir, batchId = 2)
+    assert(Snapshots.read(spark, dir).count() == 15)
+    // a table's first commit keeps one 0-row file, so the table has a schema
+    val fresh = Files.createTempDirectory("snap").toString
+    Snapshots.commitEpoch(range(0, 0), fresh, batchId = 0)
+    assert(Snapshots.snapshots(spark, fresh).last.files.size == 1)
+    assert(Snapshots.read(spark, fresh).columns.toSeq == Seq("id", "s"))
+  }
+
   test("stats-pruned scan: disjoint files never planned; results equal the full filter") {
     val dir = Files.createTempDirectory("snap").toString
     // three commits with disjoint id ranges → per-file footer ranges

@@ -1243,6 +1243,16 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // the created_at watermark advances after the first epoch, so Spark
     // runs a no-data epoch to evict dedup state: it is observed at 0 rows
     assert(observed.count(_._2 > 0) == 3, s"expected 3 observed data epochs: $metrics")
+    // that eviction epoch commits a metadata-only manifest, and no epoch
+    // adds a 0-row data file to the lake
+    val lakeSnaps = graft.sources.Snapshots.snapshots(spark, lakePath)
+    val added = lakeSnaps.zip(Seq.empty[String] +: lakeSnaps.map(_.files))
+      .map { case (sn, parentFiles) => sn.operation -> sn.files.diff(parentFiles) }
+    val evictions = observed.collect { case (id, 0L) => s"append[epoch=$id]" }
+    assert(evictions.nonEmpty && evictions.forall(e => added.exists(_ == (e -> Nil))),
+      s"eviction epochs ${evictions.mkString(", ")} did not commit metadata-only: $added")
+    for ((op, files) <- added; rel <- files)
+      assert(spark.read.parquet(s"$lakePath/$rel").count() > 0, s"$op added the 0-row file $rel")
     val observedRows = observed.map(_._2).sum
     // the observation rides the sink pass AFTER the stream's uuid
     // dedup, so summed epoch counts equal the landed rows exactly
